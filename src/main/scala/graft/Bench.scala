@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -22,23 +20,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // every TypedImperativeAggregate in graft keeps an O(k)-bounded
-      // buffer (CappedCollect, TopKRows, MinHashSig, SimHashSig), so the
-      // 128-key sort-based fallback only costs (measured 2-5x on the
-      // posting-list dedup paths) without protecting anything
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 21)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.registerAll(spark)
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession(cpus)
 
     def runOnce(dir: String, name: String): Double = {
       val t0 = System.nanoTime()
@@ -135,7 +118,7 @@ object Bench {
     spinSamples += ((names.size, calibAfter, calibMtAfter))
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val nCores = Runtime.getRuntime.availableProcessors()
+    val hostCores = Runtime.getRuntime.availableProcessors()
     // the quiet floor is the min across both sampling points (either may
     // itself be contended); flag when the OTHER point sits >2x above it,
     // or when the box-wide runqueue clearly exceeds this JVM's own load
@@ -164,7 +147,7 @@ object Bench {
     val (calibMtRef, calibMtRefSource) = Calib.loadMtRef()
     Calib.recordMtSamples(mtSamples.toSeq)
     val contended = calibWorst > calibFloor * 2.0 ||
-      (loadAvg > 0 && loadAvg > nCores * 1.5) ||
+      (loadAvg > 0 && loadAvg > hostCores * 1.5) ||
       calibMt > calibMtRef * 1.5 ||
       calibMtWorst > calibMtRef * 2.0
     // nearest spin sample (by position in the run order) for each query:
@@ -200,7 +183,7 @@ object Bench {
       s""""calib_mt_ref":${f(calibMtRef)},""" +
       s""""calib_mt_ref_source":"$calibMtRefSource",""" +
       s""""norm_factor":${f(normFactor)},""" +
-      s""""load_avg":${f(loadAvg)},"cores":$nCores"""
+      s""""load_avg":${f(loadAvg)},"cores":$cpus"""
     // "total_full" NOT "total": only the short summary line printed LAST
     // carries metric=total, so a consumer matching on the metric name can
     // never pick this head-truncatable full-map variant or double-count

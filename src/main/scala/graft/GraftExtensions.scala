@@ -9,8 +9,8 @@ import graft.functions.{DoubleDot, PolyHash}
   * works for SQL-only users and the expressions participate in codegen
   * exactly like built-ins.
   *
-  * Wire up with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * [[GraftSession]] registers them on every session graft builds. An
+  * outside deployment wires them up with
   * `--conf spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

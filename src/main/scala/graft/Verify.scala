@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,25 +8,9 @@ object Verify {
       case Array(s, o)       => (s, o, None)
       case Array(s, o, list) => (s, o, Some(list.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // every TypedImperativeAggregate in graft keeps an O(k)-bounded
-      // buffer (CappedCollect, TopKRows, MinHashSig, SimHashSig), so the
-      // 128-key sort-based fallback only costs (measured 2-5x on the
-      // posting-list dedup paths) without protecting anything
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 21)
-      // differential-robustness knob (default on, like the driver): the
-      // AQE-off sweep re-runs the whole dump under static planning — any
-      // result difference would expose a plan-dependent nondeterminism
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.registerAll(spark)
+    // SPARK_GRAFT_AQE=false re-runs the whole dump under static planning:
+    // any result difference exposes a plan-dependent nondeterminism
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

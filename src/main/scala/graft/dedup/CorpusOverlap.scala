@@ -28,15 +28,6 @@ import graft.text.TextMetrics
   */
 object CorpusOverlap {
 
-  /** Distinct (group, shingle) pairs: group-level shingle sets. */
-  def groupShingles(df: DataFrame, groupCol: String, textCol: String,
-                    n: Int): DataFrame =
-    df.select(col(groupCol).as("grp"),
-        TextMetrics.tokens(col(textCol)).as("__toks"))
-      .select(col("grp"),
-        explode(Shingles.wordShinglesFromTokens(col("__toks"), n)).as("shingle"))
-      .distinct()
-
   /** Exact pairwise Jaccard between all group pairs (grp_a < grp_b) that
     * share at least one shingle.
     *

@@ -85,10 +85,10 @@ object MinHashLsh {
   /** Public builder for the DURABLE band index: the registry a daily-crawl
     * deployment stores alongside the signature table, so each increment
     * probes it directly instead of re-banding the entire history
-    * ([[incrementalNearDupFromIndex]]). Measured in ScaleProbe's 50-drop
-    * growth curve: re-banding per drop makes the probe cost grow with
-    * registry size; a stored index keeps it bounded by the batch's band
-    * volume and the matched buckets. At scale, bucket this table by
+    * ([[incrementalNearDupFromIndex]]). Measured in the 50-drop growth
+    * curve of docs/ROUND9_NOTES.md: re-banding per drop makes the probe
+    * cost grow with registry size; a stored index keeps it bounded by the
+    * batch's band volume and the matched buckets. At scale, bucket this table by
     * (band, band_sig) so the probe is a co-located join. */
   def bandIndex(sig: DataFrame, idCol: String, p: Params = Params(),
                 literalKeys: Boolean = false): DataFrame =

@@ -27,11 +27,6 @@ object Shingles {
         transform(sequence(lit(0), size(toks) - n),
           i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*))))
 
-  /** Word n-grams of `text`, distinct per document. Prefer
-    * [[explodeShingles]], which materializes the token array first. */
-  def wordShingles(c: Column, n: Int): Column =
-    wordShinglesFromTokens(TextMetrics.tokens(c), n)
-
   /** (id, shingle) long table — the explode side of the pipeline. */
   def explodeShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     df.select(col(idCol), TextMetrics.tokens(col(textCol)).as("__toks"))
@@ -58,8 +53,8 @@ object Shingles {
     * metric coherent: a cluster of thousands of near-identical documents
     * has ALL its shared shingles over the cap, and measuring their
     * leftover sizes against pre-cap totals would report jaccard ≈ 0 for
-    * pairs that are in fact near-identical (the 8× ScaleProbe corpus
-    * demonstrates exactly this; the r3→r4 rewrite briefly got it wrong).
+    * pairs that are in fact near-identical (the 8× corpus of
+    * docs/ROUND4_NOTES.md demonstrates exactly this; the r3→r4 rewrite briefly got it wrong).
     *
     * Plan (capped, the production path): a THREE-exchange posting-list
     * pipeline. One shuffle builds the inverted index shingle → [doc ids]

@@ -204,7 +204,7 @@ object SimHash {
     * (m06-style), never materialized as quadratic pairs. `maxChunkBucket`
     * now caps distinct VALUES per chunk bucket, the scale-robust form.
     *
-    * ScaleProbe (200 distinct values, 1-bit-flip neighbors): at 40k docs
+    * docs/ROUND8_NOTES.md (200 distinct values, 1-bit-flip neighbors): at 40k docs
     * the per-row path under cap 256 returns 85k of 1.04M true pairs; at
     * 160k docs EVERY bucket exceeds the cap and it returns ZERO — total
     * recall collapse — while this variant returns the complete 16.6M

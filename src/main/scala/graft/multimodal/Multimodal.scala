@@ -1003,19 +1003,6 @@ object Multimodal {
     }
   }
 
-  /** Fingerprint audio payloads — the feature-extract stage feeding
-    * audio near-dup: exact-fingerprint clustering is a groupBy; the
-    * hamming-tolerant variant is
-    * [[graft.dedup.SimHash.hammingNearDuplicates]] on the result. */
-  def audioFingerprintPartitions(payloads: DataFrame, spark: SparkSession,
-                                 frames: Int = 16): Dataset[AudioFingerprint] = {
-    import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) =>
-        CompressedAudio.fingerprint(id, bytes, frames) })
-  }
-
   /** Frame sampling: slice a "video" payload into fixed-size frames and
     * keep every `stride`-th one — pure column ops (substring on binary),
     * no UDF, explodable downstream. */

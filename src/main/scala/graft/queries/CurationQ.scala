@@ -214,7 +214,7 @@ object CurationQ {
     // but never pay segmentation: their segments are counted nowhere
     // and cannot win the first-occurrence window (survivors sort first,
     // and `keep` requires exact_keep), so dropping them is
-    // result-identical — PerfD18 measured the explode-all variant
+    // result-identical — docs/ROUND9_NOTES.md measured the explode-all variant
     // paying a full non-survivor segmentation for nothing (d25
     // 0.87 → 0.60 s; d18 unchanged within noise). The window key is
     // salted with doc_id on null segs so non-survivor rows form

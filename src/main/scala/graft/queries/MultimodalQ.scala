@@ -41,9 +41,8 @@ object MultimodalQ {
 
   /** The image dHash surface: one 24-bit dHash row per synthetic
     * document image. Shared by [[imagePhash]] (m06), [[imageNearDup]]
-    * (m12), [[imageDrift]] (m16) and the dev scale probe
-    * ([[graft.tools.ProbeM12]]) — same single-source convention as
-    * [[videoFrameHashes]]/ProbeM14 — so a derivation change can never
+    * (m12) and [[imageDrift]] (m16) — same single-source convention as
+    * [[videoFrameHashes]] (docs/ROUND10_NOTES.md) — so a derivation change can never
     * make one consumer see a different hash distribution than the
     * others pair, cluster, or histogram on. */
   private[graft] def imageHashes(s: SparkSession, dir: String): DataFrame = {
@@ -319,7 +318,7 @@ object MultimodalQ {
     * The registered query runs the CAPPED path (d04's convention): the
     * hot-triple cap is live so the production shape is what's benched,
     * sized not to bind on the oracle corpus (largest sf0.1 bucket is 708
-    * docs — ProbeM14), so the oracle is unchanged. At real scale the cap
+    * docs, docs/ROUND10_NOTES.md), so the oracle is unchanged. At real scale the cap
     * is the dial that bounds a ubiquitous triple (black card, station
     * ident) to cap² pairs instead of corpus². Measured sf0.1→sf1
     * exponent 0.86 (docs/SCALE.md). */

@@ -548,9 +548,9 @@ object Registries {
     }
 
   /** Compact an append-only parquet registry directory to `numFiles`
-    * files — the maintenance the 50-drop ScaleProbe curve demands: daily
-    * appends accumulate one small file per drop, and at toy scale the
-    * probe's cost growth IS the file-count overhead (listing + footer
+    * files — the maintenance the 50-drop curve of docs/ROUND9_NOTES.md
+    * demands: daily appends accumulate one small file per drop, and at toy
+    * scale the probe's cost growth IS the file-count overhead (listing + footer
     * reads + one task per file). Content-preserving by construction
     * (read → repartition → write to a temp dir → aside-swap): the live
     * dir is RENAMED aside, the compacted temp renamed in, the aside

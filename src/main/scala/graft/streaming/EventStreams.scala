@@ -214,17 +214,4 @@ object EventStreams {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
   }
-
-  /** New-file discovery as a stream (the reference's new-seqrun polling,
-    * re-expressed): each micro-batch sees only unseen files; downstream is
-    * an ordinary append/merge into the store. */
-  def availableNow(df: DataFrame, queryName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Update())
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 }

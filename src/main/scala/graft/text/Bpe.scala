@@ -200,7 +200,7 @@ object Bpe {
     * this is a pure execution-strategy choice, like a broadcast-join
     * threshold. */
   /** The frozen 24-merge model `trainAuto` derives from the synthetic
-    * documents corpus (printed by `graft.tools.PrintBpeModel`, identical at
+    * documents corpus (docs/ROUND7_NOTES.md, identical at
     * sf0.01/sf0.1 — the corpus vocabulary is scale-invariant). A FIXED
     * vocabulary is the production posture anyway: a tokenizer is trained
     * once and shipped, then encode runs at corpus scale — and freezing it

@@ -17,9 +17,6 @@ object TextMetrics {
   def tokens(c: Column): Column =
     filter(split(trim(c), "\\s+"), t => t =!= "")
 
-  /** Whitespace token count. */
-  def tokenCount(c: Column): Column = size(tokens(c))
-
   /** BPE-ish subword count: letter runs, digit runs, and single
     * non-alphanumeric marks — the classic pre-tokenizer shape. */
   def bpeTokenCount(c: Column): Column =
@@ -28,17 +25,6 @@ object TextMetrics {
   /** Punctuation character count (anything outside alnum/whitespace). */
   def punctCount(c: Column): Column =
     length(c) - length(regexp_replace(c, "[^a-zA-Z0-9\\s]", ""))
-
-  /** Mean token length in double (integer sums → engine-stable division). */
-  def meanTokenLen(c: Column): Column = {
-    val lens = transform(tokens(c), t => length(t))
-    (aggregate(lens, lit(0), (acc, x) => acc + x).cast("double") /
-      size(lens).cast("double"))
-  }
-
-  /** Number of tokens that appear in `vocab` (stopword-ratio numerator). */
-  def vocabHits(c: Column, vocab: Seq[String]): Column =
-    size(filter(tokens(c), t => t.isin(vocab.map(lit): _*)))
 
   /** Tiny per-language stopword profiles for the n-gram-heuristic
     * language-ID. Deterministic and SQL-mirrorable; a production profile
@@ -49,17 +35,12 @@ object TextMetrics {
     "de" -> Seq("der", "die", "das", "und", "zu"),
     "fr" -> Seq("le", "la", "de", "et", "que"))
 
-  /** Language-ID: argmax of profile hit counts, 'und' when all zero.
-    * Ties break by profile order (first wins), mirroring a CASE cascade.
-    *
-    * NOTE: the when-cascade references each score several times and Spark
-    * does no common-subexpression elimination across them — pass a
-    * MATERIALIZED token-array column (`df.withColumn("toks", tokens(c))`)
-    * via [[langIdFromTokens]] on hot paths; this convenience overload
-    * inlines the tokenizer and re-runs it per score. */
-  def langId(c: Column): Column = langIdFromTokens(tokens(c))
-
-  /** Language-ID over a materialized token array (the scale path). */
+  /** Language-ID over a materialized token array: argmax of profile hit
+    * counts, 'und' when all zero. Ties break by profile order (first
+    * wins), mirroring a CASE cascade. The cascade references each score
+    * several times and Spark does no common-subexpression elimination
+    * across them, so the caller materializes the tokens once
+    * (`df.withColumn("toks", tokens(c))`). */
   def langIdFromTokens(toks: Column): Column = {
     val scores = langProfiles.map { case (lang, words) =>
       lang -> size(filter(toks, t => t.isin(words.map(lit): _*)))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal twin checker (dev harness): asserts the result-equal
@@ -23,17 +22,7 @@ object ScaleInvariants {
     val linearOnly = args.contains("--linear-only")
     val dir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 21)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.registerAll(spark)
+    val spark = graft.GraftSession()
     graft.meta.MetadataStar.materialize(spark, dir)
     graft.store.Registries.materialize(spark, dir)
 

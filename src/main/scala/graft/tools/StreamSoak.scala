@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -30,13 +29,8 @@ object StreamSoak {
     // table is skipped too)
     val only = args.lift(3)
     def enabled(flow: String): Boolean = only.forall(_ == flow)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "1024")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.registerAll(spark)
+    val spark = graft.GraftSession()
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1024")
     val t = graft.Tables(spark, sfDir)
     val out = new java.io.PrintWriter(new java.io.FileWriter(outPath))
 

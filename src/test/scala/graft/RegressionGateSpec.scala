@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * 1.25–1.84x multi-core calib drift at identical single-thread floors),
   * so absolute wall-clock thresholds either flake or sleep through real
   * regressions. This gate times each flagship ALTERNATING with a fixed
-  * Spark calibration job in the same JVM (PerfR9's methodology) and
+  * Spark calibration job in the same JVM (the same-JVM alternation of
+  * docs/ROUND9_NOTES.md) and
   * asserts the RATIO query/calib against a recorded reference: a host
   * slowdown inflates numerator and denominator together and cancels; a
   * code regression moves only the numerator and trips the gate.
