@@ -8,9 +8,9 @@ import graft.{Calib, GraftSession, SparkEntry}
 
 /** Dev probe over registered queries, on the shared [[GraftSession]]:
   *
-  *   sbt "runMain graft.tools.Probe time /root/testdata/sf0.1 d07_simhash_dedup e04_centroid_assign"
-  *   sbt "runMain graft.tools.Probe stages /root/testdata/sf0.1 e19_incr_neardup_adaptive"
-  *   sbt --error "runMain graft.tools.Probe plan /root/testdata/sf0.01" > docs/PLANS.md
+  *   sbt "runMain graft.tools.Probe time <sf dir> d07_simhash_dedup e04_centroid_assign"
+  *   sbt "runMain graft.tools.Probe stages <sf dir> e19_incr_neardup_adaptive"
+  *   sbt --error "runMain graft.tools.Probe plan <sf0.01 dir>" > docs/PLANS.md
   *
   *  - `time`: 3 alternated reps of every named query, each fully
   *    materialized through the noop sink (Bench's method) after a cache
