@@ -28,6 +28,6 @@ object Lookup {
 
   /** Existence probe for a single key — the per-row `check_*` adaptor
     * calls. For BATCHES of keys use a left_anti/left_semi join instead
-    * (one shuffle, not N probes) — see MetadataStore.insertIfAbsent. */
+    * (one shuffle, not N probes) — see BucketedStore.insertIfAbsent. */
   def exists(df: DataFrame): Boolean = df.take(1).nonEmpty
 }

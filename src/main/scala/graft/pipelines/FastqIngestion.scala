@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.MetadataStore
+import graft.store.Store
 
 /** Fastq ingestion lifecycle (SURVEY §3.1,
   * collect_seqrun_fastq_to_db.py:52-82).
@@ -92,7 +92,7 @@ object FastqIngestion {
     * an idempotent insert-if-absent; per-run R1/R2 read-count attributes are
     * refreshed via MERGE (the reference's update path for existing runs,
     * collect_seqrun_fastq_to_db.py:646-674). Returns inserted-file count. */
-  def ingest(store: MetadataStore, enriched: DataFrame): Long = {
+  def ingest(store: Store, enriched: DataFrame): Long = {
     val experiments = enriched.select("experiment_igf_id", "sample_name").distinct()
     store.insertIfAbsent("experiment", experiments, Seq("experiment_igf_id"))
 

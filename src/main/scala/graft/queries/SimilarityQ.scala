@@ -634,27 +634,17 @@ object SimilarityQ {
       .withColumn("recall", round(col("n_hit").cast("double") / 10.0, 9))
       .withColumn("n_sampled",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy()))
-    // release the PREVIOUS invocation's persisted probe (one-slot cache):
-    // repeated audits in a long-lived session (bench warm-ups, verify
-    // reruns) would otherwise pin one DataFrame per call in the block
-    // manager forever. The swap keeps THIS call's result fully lazy —
-    // an eager collect-and-localize here would hand every plan gate a
+    // release the PREVIOUS invocation's persisted probe: repeated audits
+    // in a long-lived session (bench warm-ups, verify reruns) would
+    // otherwise pin one DataFrame per call in the block manager forever.
+    // The slot keeps THIS call's result fully lazy — an eager
+    // collect-and-localize here would hand every plan gate a
     // LocalTableScan and silently blind them to the real pipeline.
-    // sameResult guard: a repeat audit over the same input registers the
-    // SAME CacheManager entry (entries are keyed by canonical plan), so
-    // unpersisting the previous frame would kill the cache this call just
-    // primed and run the stored-probe pipeline twice from call 2 on
-    Option(lastProbeCache.getAndSet(approx))
-      .filter(_ ne approx)
-      .filterNot(_.queryExecution.analyzed.sameResult(approx.queryExecution.analyzed))
-      .foreach { prev => prev.unpersist(); () }
+    lastProbe.keep(approx)
     out
   }
 
-  /** One-slot cache of [[ivfRecall]]'s persisted probe — see its release
-    * comment; bounds the pinned-DataFrame count at one per session. */
-  private val lastProbeCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
+  private val lastProbe = new OneSlotCache
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "e14_ann_recall" -> ((s, d) => ivfRecall(s, d)),

@@ -162,24 +162,13 @@ object TextQ {
         sum(when(col("__hit").isNotNull, 1L).otherwise(0L)).as("n_caught"))
       .withColumn("recall",
         round(col("n_caught").cast("double") / col("n_true").cast("double"), 9))
-    // one-slot release of the PREVIOUS audit's truth cache (e14's
-    // convention): the returned frame stays fully lazy, repeated audits
-    // in a long-lived session pin at most one ≤4096-row cache entry.
-    // sameResult guard: CacheManager dedupes entries by canonical plan,
-    // so when the repeat audit reads the SAME input its persist is the
-    // SAME entry — unpersisting the previous frame would kill the cache
-    // this call just registered and double-evaluate the truth pipeline
-    Option(lastTruthCache.getAndSet(truth))
-      .filter(_ ne truth)
-      .filterNot(_.queryExecution.analyzed.sameResult(truth.queryExecution.analyzed))
-      .foreach { prev => prev.unpersist(); () }
+    // release the PREVIOUS audit's truth cache: repeated audits in a
+    // long-lived session pin at most one ≤4096-row cache entry
+    lastTruth.keep(truth)
     out
   }
 
-  /** One-slot cache of [[sketchRecallFrom]]'s persisted truth sample —
-    * see the release comment above; bounds pinned frames at one. */
-  private val lastTruthCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
+  private val lastTruth = new OneSlotCache
 
   /** Sketch-recall audit on a bounded document sample (d41b) — d41's
     * scale path: the same per-band S-curve, measured over the m

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Bucketed persistence for co-located joins.
   *
@@ -21,6 +21,4 @@ object Bucketing {
       .bucketBy(buckets, key)
     sortBy.fold(w)(s => w.sortBy(s)).saveAsTable(table)
   }
-
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
 }

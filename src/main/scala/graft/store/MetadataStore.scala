@@ -3,140 +3,16 @@ package graft.store
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Parquet-backed metadata store — the engine's replacement for the
-  * reference's 24-table SQLAlchemy adaptor layer (baseadaptor.py,
-  * SURVEY.md §1.1, §2.9).
-  *
-  * Layout: `root/<table>/v%06d/` snapshot directories plus a `_CURRENT`
-  * pointer file. Every mutation writes a NEW snapshot and then atomically
-  * swaps the pointer — readers never see a half-written table, replays of
-  * idempotent merges converge (SURVEY §7.4's answer to the reference's
-  * multi-table transactions), and old versions remain for audit/time-travel.
-  * On a real deployment the same API maps 1:1 onto Delta/Iceberg MERGE;
-  * the snapshot indirection is only the no-extra-dependency stand-in.
-  *
-  * Scope: dimension-sized tables, where an O(table) snapshot per commit is
-  * cheap. Fact-sized tables (run / file / *_attribute at 100 TB) use
-  * [[BucketedStore]], whose manifest layout rewrites only the hash buckets
-  * a MERGE actually touches.
-  *
-  * Empty-string normalization on write matches the reference's "drop empty
-  * values before insert" rule (baseadaptor.py:39-44).
+/** The one-bucket [[BucketedStore]]: every commit writes the whole table
+  * as the next snapshot — the store for dimension-sized tables, where an
+  * O(table) commit is cheap. Readers never see a half-written table,
+  * replays of idempotent merges converge (SURVEY §7.4's answer to the
+  * reference's multi-table transactions), racing writers fail loudly
+  * instead of losing an update, and old snapshots stay readable through
+  * `readAt` until `vacuum`.
   */
-final class MetadataStore(spark: SparkSession, root: String) extends Store {
-  import java.nio.file.{Files, Paths, StandardCopyOption}
-
-  private def tableDir(name: String) = Paths.get(root, name)
-  private def pointer(name: String) = tableDir(name).resolve("_CURRENT")
-
-  override def exists(name: String): Boolean = Files.exists(pointer(name))
-
-  private def currentVersion(name: String): Int =
-    if (exists(name)) new String(Files.readAllBytes(pointer(name))).trim.toInt else 0
-
-  private def versionPath(name: String, v: Int) =
-    tableDir(name).resolve(f"v$v%06d")
-
-  override def read(name: String): DataFrame = {
-    require(exists(name), s"table $name does not exist under $root")
-    spark.read.parquet(versionPath(name, currentVersion(name)).toString)
-  }
-
-  /** Write a full snapshot as the next version and swap the pointer. */
-  private def commit(name: String, df: DataFrame): Int = {
-    val next = currentVersion(name) + 1
-    Files.createDirectories(tableDir(name))
-    df.write.mode("overwrite").parquet(versionPath(name, next).toString)
-    val tmp = tableDir(name).resolve("_CURRENT.tmp")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, pointer(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    next
-  }
-
-  private def normalize(df: DataFrame): DataFrame = Store.normalize(df)
-
-  override def create(name: String, df: DataFrame): Unit =
-    commit(name, normalize(df))
-
-  override def append(name: String, df: DataFrame): Unit = {
-    val merged = if (exists(name))
-      read(name).unionByName(normalize(df), allowMissingColumns = true)
-    else normalize(df)
-    commit(name, merged)
-  }
-
-  /** Insert-if-absent (collect_seqrun_fastq_to_db.py:515-757's anti-probe):
-    * ONE anti-join replaces the reference's N+1 per-row existence checks.
-    * Returns the number of rows actually inserted. */
-  override def insertIfAbsent(name: String, df: DataFrame, keys: Seq[String]): Long = {
-    val fresh = normalize(df)
-    if (!exists(name)) { commit(name, fresh); fresh.count() }
-    else {
-      val existing = read(name)
-      val novel = fresh.join(existing.select(keys.map(col): _*).distinct(),
-        keys, "left_anti")
-      val n = novel.count()
-      if (n > 0) commit(name, existing.unionByName(novel, allowMissingColumns = true))
-      n
-    }
-  }
-
-  /** MERGE: matched rows are replaced by the incoming version, unmatched
-    * are inserted (pipelineadaptor.py:408-494 create_or_update semantics,
-    * collectionadaptor.py:101-260 attribute upsert when keyed on
-    * (entity_id, attribute_name)). */
-  override def upsert(name: String, df: DataFrame, keys: Seq[String]): Unit = {
-    val fresh = normalize(df)
-    if (!exists(name)) { commit(name, fresh); () }
-    else {
-      val existing = read(name)
-      val kept = existing.join(fresh.select(keys.map(col): _*).distinct(),
-        keys, "left_anti")
-      commit(name, kept.unionByName(fresh, allowMissingColumns = true))
-      ()
-    }
-  }
-
-  /** DELETE by key set, as an anti-join rewrite (runadaptor.py:461-483). */
-  override def delete(name: String, keysDf: DataFrame, keys: Seq[String]): Unit = {
-    val remaining = read(name).join(keysDf.select(keys.map(col): _*).distinct(),
-      keys, "left_anti")
-    commit(name, remaining)
-    ()
-  }
-
-  /** FK-cascade delete (collectionadaptor.py:694-890): delete parents, then
-    * anti-join each child table against the DELETED key set. Scoped to the
-    * passed keys — pre-existing orphans a caller didn't ask about are left
-    * alone (they're a data-quality signal, not this call's business). */
-  override def deleteCascade(parent: String, keysDf: DataFrame, keys: Seq[String],
-                             children: Seq[(String, String)]): Unit = {
-    val deleted = keysDf.select(col(keys.head)).distinct()
-    delete(parent, keysDf, keys)
-    children.foreach { case (child, fk) =>
-      val keep = read(child).join(deleted.select(col(keys.head).as(fk)),
-        Seq(fk), "left_anti")
-      commit(child, keep)
-    }
-  }
-
-  def versions(name: String): Seq[Int] =
-    if (!Files.exists(tableDir(name))) Nil
-    else {
-      val it = Files.list(tableDir(name)).iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Int]
-      while (it.hasNext) {
-        val p = it.next().getFileName.toString
-        if (p.startsWith("v")) buf += p.drop(1).toInt
-      }
-      buf.toSeq.sorted
-    }
-
-  /** Time-travel read of a specific snapshot version. */
-  def readVersion(name: String, v: Int): DataFrame =
-    spark.read.parquet(versionPath(name, v).toString)
-}
+final class MetadataStore(spark: SparkSession, root: String)
+  extends BucketedStore(spark, root, numBuckets = 1)
 
 object SurrogateKeys {
   /** Stable surrogate ids without a sequential DB (SURVEY §7.4): new rows

@@ -8,14 +8,17 @@ import org.apache.spark.sql.functions._
   * (baseadaptor.py store/modify/delete records, SURVEY §2.1 sinks, §2.9).
   *
   * Two backends implement it:
-  *   - [[MetadataStore]] — versioned parquet snapshots (the sanctioned
-  *     lakehouse path; maps 1:1 onto Delta/Iceberg MERGE at deployment)
+  *   - the manifest store, [[BucketedStore]] — versioned parquet buckets
+  *     under an atomically swapped manifest (the sanctioned lakehouse
+  *     path; maps 1:1 onto Delta/Iceberg MERGE at deployment). One bucket
+  *     is the snapshot store of dimension tables, [[MetadataStore]].
   *   - [[JdbcStore]] — a live DBMS over `spark.read/write.jdbc` with
   *     set-based staged MERGE/DELETE, matching the reference's actual
   *     MySQL-backed operation (dbconnect.py:8-165)
   *
-  * Pipelines ([[Seeding]], ingestion collectors) bind to this trait, so a
-  * deployment picks the backend per table without touching pipeline code.
+  * Pipelines ([[Seeding]], [[graft.pipelines.FastqIngestion]]) bind to
+  * this trait, so a deployment picks the backend per table without
+  * touching pipeline code.
   */
 trait Store {
   def exists(name: String): Boolean

@@ -2,8 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
+
+import graft.store.BucketedStore
 
 /** Structured Streaming over the events table — the incremental layer the
   * reference lacks (SURVEY §2.10: its "streaming" is Airflow polling +
@@ -171,44 +173,46 @@ object EventStreams {
   }
 
   /** Incremental store ingestion: every micro-batch of newly-discovered
-    * rows MERGEs into a [[graft.store.MetadataStore]] table via
+    * rows is inserted-if-absent into a manifest-store table via
     * foreachBatch — the full streaming twin of the reference's
     * poll-directory → anti-join → insert loop (ongoing_seqrun_processing
     * .py + pipelineadaptor seeding), with the checkpoint making redelivery
     * idempotent on top of the store's own insert-if-absent. */
-  def ingestStream(events: DataFrame, store: graft.store.MetadataStore,
+  def ingestStream(events: DataFrame, store: BucketedStore,
                    table: String, keys: Seq[String], checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        store.insertIfAbsent(table, batch, keys)
-        // replay after a crash here re-runs insertIfAbsent with the same
-        // rows — idempotent by the anti-join, CrashRecoverySpec proves it
-        Failpoints.hit("ingest:post", checkpoint)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    mergeStream(events, store, table, checkpoint, "ingest:post") { batch =>
+      store.insertIfAbsent(table, batch, keys); ()
+    }
 
-  /** Incremental MERGE into the partition-pruned [[graft.store.BucketedStore]]
-    * — the fact-table twin of [[ingestStream]]: each micro-batch rewrites
-    * only the hash buckets its keys touch, so ingestion I/O tracks batch
-    * size, not table size. Replays of a delivered batch converge (upsert
-    * is idempotent on identical rows) — including the PRE-commit crash
-    * window: a crash between claimNextVersion and swapPointer leaves an
-    * orphan claim dir that would wedge every replayed upsert with
+  /** Incremental MERGE: each micro-batch upserts on `keys`, so on a
+    * multi-bucket store keyed by them it rewrites only the hash buckets
+    * its keys touch, and ingestion I/O tracks batch size, not table
+    * size. */
+  def ingestStreamBucketed(events: DataFrame, store: BucketedStore,
+                           table: String, keys: Seq[String], checkpoint: String)
+      : StreamingQuery =
+    mergeStream(events, store, table, checkpoint, "ingestb:post")(
+      store.upsert(table, _, keys))
+
+  /** The body both ingest streams share. Replays of a delivered batch
+    * converge (insert-if-absent and upsert are idempotent on identical
+    * rows) — including the PRE-commit crash window: a crash between
+    * claiming a version and swapping the pointer leaves an orphan claim
+    * dir that would wedge every replayed commit with
     * ConcurrentModificationException, so stale claims are recovered at
     * each stream (re)start, where the streaming checkpoint guarantees the
     * single-writer assumption recoverStaleClaims requires. */
-  def ingestStreamBucketed(events: DataFrame, store: graft.store.BucketedStore,
-                           table: String, keys: Seq[String], checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+  private def mergeStream(events: DataFrame, store: BucketedStore, table: String,
+                          checkpoint: String, failpoint: String)
+                         (merge: DataFrame => Unit): StreamingQuery = {
     store.recoverStaleClaims(table)
     events.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        store.upsert(table, batch, keys)
-        // replay re-upserts identical rows — idempotent by the keyed MERGE
-        Failpoints.hit("ingestb:post", checkpoint)
+        merge(batch)
+        // a crash here replays the batch over the committed merge —
+        // CrashRecoverySpec proves both streams converge
+        Failpoints.hit(failpoint, checkpoint)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.BucketedStore
+import graft.store.{BucketedStore, MetadataStore}
 
 /** Partition-pruned MERGE: upserts rewrite ONLY buckets containing touched
   * keys; untouched buckets keep their exact prior files (same paths, same
@@ -17,6 +17,13 @@ class BucketedStoreSpec extends AnyFunSuite {
   private def newStore(): (BucketedStore, String) = {
     val dir = Files.createTempDirectory("bucketed_store").toString
     (new BucketedStore(spark, dir, numBuckets = 16), dir)
+  }
+
+  /** Buckets `op` rewrote: the ones whose manifest entry moved. */
+  private def rewritten(st: BucketedStore, t: String)(op: => Unit): Set[Int] = {
+    val before = st.manifest(t)
+    op
+    st.manifest(t).collect { case (b, v) if !before.get(b).contains(v) => b }.toSet
   }
 
   private val base = (1 to 500).map(i => (i.toLong, s"name_$i", s"v0"))
@@ -39,7 +46,7 @@ class BucketedStoreSpec extends AnyFunSuite {
 
     val incoming = Seq((42L, "name_42", "v1"), (9999L, "brand_new", "v1"))
       .toDF("id", "name", "payload")
-    val touched = st.upsert("t", incoming, Seq("id"))
+    val touched = rewritten(st, "t")(st.upsert("t", incoming, Seq("id")))
     assert(touched.nonEmpty && touched.size <= 2)
 
     // untouched buckets: same physical files, byte-identical
@@ -76,7 +83,7 @@ class BucketedStoreSpec extends AnyFunSuite {
     val (st, _) = newStore()
     st.create("t", base, Seq("id"))
     val before = (0 until 16).map(b => b -> st.bucketFiles("t", b)).toMap
-    val touched = st.delete("t", Seq(1L, 2L).toDF("id"), Seq("id"))
+    val touched = rewritten(st, "t")(st.delete("t", Seq(1L, 2L).toDF("id"), Seq("id")))
     assert(st.read("t").count() == 498)
     for (b <- (0 until 16).filterNot(touched))
       assert(st.bucketFiles("t", b) == before(b))
@@ -169,8 +176,13 @@ class BucketedStoreSpec extends AnyFunSuite {
     assert(st.read("t").count() == 0)
   }
 
-  test("concurrent writers serialize or fail loudly — no lost update") {
-    val (st, _) = newStore()
+  // the same race on the 16-bucket store and on the one-bucket snapshot
+  // store, which shares its commit protocol
+  for ((label, numBuckets) <- Seq("" -> 16, " (MetadataStore, one bucket)" -> 1))
+  test(s"concurrent writers serialize or fail loudly — no lost update$label") {
+    val st = if (numBuckets == 1)
+      new MetadataStore(spark, Files.createTempDirectory("metadata_store").toString)
+    else newStore()._1
     st.create("t", base, Seq("id"))
     // two genuinely concurrent upserts on DISJOINT keys; before the
     // claim protocol both could read v1, both write v2, and the last
@@ -206,7 +218,7 @@ class BucketedStoreSpec extends AnyFunSuite {
     assert(st.read("t").filter(col("id") >= 9000L).count() == 2)
     // pointer/manifest consistency after the race + retries
     val m = st.manifest("t")
-    assert(m.keySet == (0 until 16).toSet)
+    assert(m.keySet == (0 until numBuckets).toSet)
   }
 
   test("a crashed claim blocks writers loudly until recoverStaleClaims") {
@@ -239,5 +251,25 @@ class BucketedStoreSpec extends AnyFunSuite {
     Files.createDirectory(wide)
     assert(st.recoverStaleClaims("t") == Seq(1000000))
     assert(!Files.exists(wide))
+  }
+
+  test("an upsert keyed off the bucket keys rewrites every bucket: no duplicate") {
+    val (st, _) = newStore()
+    st.create("t", base, Seq("id"))
+    // rows hash by id; keyed on name, a matched row may sit in any bucket
+    val incoming = (1 to 20).map(i => (i.toLong, s"name_$i", "v1")).toDF("id", "name", "payload")
+    val touched = rewritten(st, "t")(st.upsert("t", incoming, Seq("name")))
+    assert(touched == (0 until 16).toSet)
+    val after = st.read("t")
+    assert(after.count() == 500)
+    assert(after.groupBy("name").count().filter(col("count") > 1).count() == 0)
+    assert(after.filter(col("payload") === "v1").count() == 20)
+  }
+
+  test("keyless create needs a one-bucket store") {
+    val (st, _) = newStore()
+    val e = intercept[IllegalArgumentException](st.create("t", base))
+    assert(e.getMessage.contains("create(name, df, keys)"))
+    assert(!st.exists("t"))
   }
 }

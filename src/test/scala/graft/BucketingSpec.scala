@@ -26,8 +26,8 @@ class BucketingSpec extends AnyFunSuite {
       t.lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
       "b_lineitem", "o_orderkey", 8, sortBy = Some("o_orderkey"))
 
-    val joined = Bucketing.read(spark, "b_orders")
-      .join(Bucketing.read(spark, "b_lineitem"), Seq("o_orderkey"))
+    val joined = spark.table("b_orders")
+      .join(spark.table("b_lineitem"), Seq("o_orderkey"))
       .groupBy("o_orderpriority").agg(sum(col("l_quantity")).as("q"))
     val plan = joined.queryExecution.executedPlan.toString
     // the join itself must not shuffle either side: the only Exchange in

@@ -69,12 +69,16 @@ class IngestStreamSpec extends AnyFunSuite {
     assert(untouched >= 14, s"only $untouched buckets untouched")
   }
 
-  test("stream start recovers an orphan claim left by a pre-commit crash") {
+  // both streams recover at start: the snapshot stream's one-bucket store
+  // claims its versions the same way
+  for ((label, snapshot) <- Seq("" -> false, " (ingestStream, one bucket)" -> true))
+  test(s"stream start recovers an orphan claim left by a pre-commit crash$label") {
     import spark.implicits._
     val dropDir = java.nio.file.Files.createTempDirectory("cdrops")
     val ckpt = java.nio.file.Files.createTempDirectory("cckpt").toString
     val root = java.nio.file.Files.createTempDirectory("cst").toString
-    val store = new graft.store.BucketedStore(spark, root, numBuckets = 16)
+    val store = if (snapshot) new MetadataStore(spark, root)
+      else new graft.store.BucketedStore(spark, root, numBuckets = 16)
 
     (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v")
       .write.parquet(dropDir.resolve("batch1").toString)
@@ -82,7 +86,8 @@ class IngestStreamSpec extends AnyFunSuite {
       val src = spark.readStream
         .schema("id LONG, v STRING")
         .parquet(dropDir.toString + "/*")
-      EventStreams.ingestStreamBucketed(src, store, "t", Seq("id"), ckpt)
+      (if (snapshot) EventStreams.ingestStream(src, store, "t", Seq("id"), ckpt)
+       else EventStreams.ingestStreamBucketed(src, store, "t", Seq("id"), ckpt))
         .awaitTermination()
     }
     runOnce()
@@ -90,21 +95,23 @@ class IngestStreamSpec extends AnyFunSuite {
 
     // simulate a crash between claimNextVersion and swapPointer: the claim
     // dir for the next version exists (with partial data) but was never
-    // committed. Without start-time recovery every replayed upsert throws
+    // committed. Without start-time recovery every replayed commit throws
     // ConcurrentModificationException forever — the flow is wedged.
     val cur = store.versions("t").max
     val orphan = java.nio.file.Paths.get(root, "t", f"v${cur + 1}%06d")
     java.nio.file.Files.createDirectory(orphan)
     java.nio.file.Files.writeString(orphan.resolve("part-junk.parquet"), "junk")
 
-    Seq((5L, "v5b")).toDF("id", "v")
+    Seq((5L, "v5b"), (101L, "v101")).toDF("id", "v")
       .write.parquet(dropDir.resolve("batch2").toString)
     runOnce() // must not wedge: recoverStaleClaims runs at stream start
     // the recovered version number is legitimately re-claimed by the new
     // commit — the crashed claim's partial contents must be gone
     assert(!java.nio.file.Files.exists(orphan.resolve("part-junk.parquet")),
       "orphan claim contents not recovered")
+    assert(store.read("t").count() == 101)
+    // insert-if-absent keeps id 5's first row; the MERGE replaces it
     assert(store.read("t").filter(org.apache.spark.sql.functions.col("id") === 5L)
-      .select("v").head.getString(0) == "v5b")
+      .select("v").head.getString(0) == (if (snapshot) "v5" else "v5b"))
   }
 }

@@ -1,23 +1,29 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.{JdbcStore, MetadataStore, Seeding, Store, SurrogateKeys}
+import graft.store.{BucketedStore, JdbcStore, MetadataStore, Seeding, Store, SurrogateKeys}
 
 /** Backend-agnostic mutation contract: every [[Store]] implementation must
   * pass these (the reference's adaptor-layer semantics, SURVEY §2.9). */
-abstract class StoreContract extends AnyFunSuite {
+abstract class StoreContract[S <: Store] extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
 
   def backend: String
-  def newStore(): Store
+  def newStore(): S
+
+  /** A backend's way to create a table; `keys` are the columns a
+    * multi-bucket store buckets the table by. */
+  def createTable(st: S, name: String, df: DataFrame, keys: String*): Unit =
+    st.create(name, df)
 
   test(s"$backend: create/read round-trip with empty-string normalization") {
     val st = newStore()
-    st.create("project", Seq(("IGFQ0001", "ACTIVE"), ("IGFQ0002", ""))
-      .toDF("project_igf_id", "status"))
+    createTable(st, "project", Seq(("IGFQ0001", "ACTIVE"), ("IGFQ0002", ""))
+      .toDF("project_igf_id", "status"), "project_igf_id")
     val got = st.read("project")
     assert(got.count() == 2)
     assert(got.filter(col("status").isNull).count() == 1)
@@ -25,14 +31,15 @@ abstract class StoreContract extends AnyFunSuite {
 
   test(s"$backend: append adds rows to an existing table") {
     val st = newStore()
-    st.create("t", Seq(Tuple1(1L)).toDF("x"))
+    createTable(st, "t", Seq(Tuple1(1L)).toDF("x"), "x")
     st.append("t", Seq(Tuple1(2L)).toDF("x"))
     assert(st.read("t").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
   }
 
   test(s"$backend: insertIfAbsent inserts only novel keys and is idempotent") {
     val st = newStore()
-    st.create("sample", Seq(("S1", "P1"), ("S2", "P1")).toDF("sample_igf_id", "project"))
+    createTable(st, "sample", Seq(("S1", "P1"), ("S2", "P1")).toDF("sample_igf_id", "project"),
+      "sample_igf_id")
     val n1 = st.insertIfAbsent("sample",
       Seq(("S2", "P1"), ("S3", "P2")).toDF("sample_igf_id", "project"), Seq("sample_igf_id"))
     assert(n1 == 1 && st.read("sample").count() == 3)
@@ -43,7 +50,8 @@ abstract class StoreContract extends AnyFunSuite {
 
   test(s"$backend: upsert replaces matched rows and inserts unmatched") {
     val st = newStore()
-    st.create("seed", Seq((1L, "SEEDED"), (2L, "RUNNING")).toDF("seed_id", "status"))
+    createTable(st, "seed", Seq((1L, "SEEDED"), (2L, "RUNNING")).toDF("seed_id", "status"),
+      "seed_id")
     st.upsert("seed", Seq((2L, "FINISHED"), (3L, "SEEDED")).toDF("seed_id", "status"), Seq("seed_id"))
     val got = st.read("seed").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "SEEDED", 2L -> "FINISHED", 3L -> "SEEDED"))
@@ -52,8 +60,9 @@ abstract class StoreContract extends AnyFunSuite {
   test(s"$backend: attribute upsert on (entity_id, attribute_name) refreshes values") {
     // run-attribute refresh semantics (collect_seqrun_fastq_to_db.py:646-674)
     val st = newStore()
-    st.create("run_attribute", Seq((1L, "R1_READ_COUNT", "100"), (1L, "R2_READ_COUNT", "90"))
-      .toDF("run_id", "attribute_name", "attribute_value"))
+    createTable(st, "run_attribute",
+      Seq((1L, "R1_READ_COUNT", "100"), (1L, "R2_READ_COUNT", "90"))
+        .toDF("run_id", "attribute_name", "attribute_value"), "run_id", "attribute_name")
     st.upsert("run_attribute", Seq((1L, "R1_READ_COUNT", "150"), (2L, "R1_READ_COUNT", "70"))
       .toDF("run_id", "attribute_name", "attribute_value"), Seq("run_id", "attribute_name"))
     val got = st.read("run_attribute").collect()
@@ -64,11 +73,13 @@ abstract class StoreContract extends AnyFunSuite {
 
   test(s"$backend: delete with FK cascade removes the deleted keys' children") {
     val st = newStore()
-    st.create("collection", Seq((1L, "c1"), (2L, "c2")).toDF("collection_id", "name"))
+    createTable(st, "collection", Seq((1L, "c1"), (2L, "c2")).toDF("collection_id", "name"),
+      "collection_id")
     // 99L is a pre-existing orphan: no parent, and NOT in the delete set —
     // the cascade is scoped to the passed keys and must leave it alone
-    st.create("collection_group", Seq((1L, 10L), (1L, 11L), (2L, 12L), (99L, 13L))
-      .toDF("collection_id", "file_id"))
+    // keyed on file_id, so the cascade's FK is not the bucket key
+    createTable(st, "collection_group", Seq((1L, 10L), (1L, 11L), (2L, 12L), (99L, 13L))
+      .toDF("collection_id", "file_id"), "file_id")
     st.deleteCascade("collection", Seq(Tuple1(1L)).toDF("collection_id"),
       Seq("collection_id"), Seq(("collection_group", "collection_id")))
     assert(st.read("collection").count() == 1)
@@ -95,8 +106,9 @@ abstract class StoreContract extends AnyFunSuite {
   }
 }
 
-/** Parquet snapshot backend: the contract plus versioning/time travel. */
-class StoreSpec extends StoreContract {
+/** Parquet snapshot backend (the one-bucket manifest store): the contract
+  * plus versioning/time travel. */
+class StoreSpec extends StoreContract[MetadataStore] {
   import SparkTestSession._
   import spark.implicits._
 
@@ -111,7 +123,7 @@ class StoreSpec extends StoreContract {
     st.create("t", Seq(Tuple1(1)).toDF("x"))
     st.append("t", Seq(Tuple1(2)).toDF("x"))
     assert(st.versions("t") == Seq(1, 2))
-    assert(st.readVersion("t", 1).count() == 1 && st.read("t").count() == 2)
+    assert(st.readAt("t", 1).count() == 1 && st.read("t").count() == 2)
   }
 
   test("surrogate keys continue from existing max and are dense") {
@@ -122,9 +134,19 @@ class StoreSpec extends StoreContract {
   }
 }
 
+/** The manifest store at 16 buckets: the same contract where every table
+  * is bucketed by its key, so ops on other keys must rewrite every bucket. */
+class BucketedStoreContractSpec extends StoreContract[BucketedStore] {
+  override def backend = "bucketed"
+  override def newStore(): BucketedStore = new BucketedStore(SparkTestSession.spark,
+    java.nio.file.Files.createTempDirectory("graft-bstore").toString, numBuckets = 16)
+  override def createTable(st: BucketedStore, name: String, df: DataFrame,
+                           keys: String*): Unit = st.create(name, df, keys)
+}
+
 /** Live-DBMS backend over embedded Derby: the same contract, every mutation
   * a staged set-based statement in the database (no per-row driver loop). */
-class JdbcStoreSpec extends StoreContract {
+class JdbcStoreSpec extends StoreContract[JdbcStore] {
   import SparkTestSession._
   import spark.implicits._
 
