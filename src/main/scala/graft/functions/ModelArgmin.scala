@@ -69,12 +69,20 @@ object ModelArgmin {
                cnrms: Seq[Double], k: Int): Column =
     Bridge.column(Q9CosTopCents(Bridge.expression(vec), cids, cents, cnrms, k))
 
+  /** A model id collected as long, refused unless it fits in an int: an
+    * `as int` cast wraps an id >= 2^31 silently with ANSI off, and fails
+    * without naming the column with ANSI on. */
+  private def intId(v: Long, column: String): Int = {
+    require(v.isValidInt, s"model column $column holds $v, outside the int range")
+    v.toInt
+  }
+
   /** Collect a (id, vec) model DataFrame to sorted parallel arrays — the
     * bounded driver-scale contract point shared by every argmin caller. */
   def collectModel(df: org.apache.spark.sql.DataFrame, idCol: String,
                    vecCol: String): (Seq[Int], Seq[Seq[Long]]) = {
-    val rows = df.selectExpr(s"cast($idCol as int)", vecCol).collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toIndexedSeq))
+    val rows = df.selectExpr(s"cast($idCol as long)", vecCol).collect()
+      .map(r => (intId(r.getLong(0), idCol), r.getSeq[Long](1).toIndexedSeq))
       .sortBy(_._1).toIndexedSeq
     require(rows.nonEmpty, s"empty model frame ($idCol, $vecCol)")
     (rows.map(_._1), rows.map(_._2))
@@ -85,9 +93,10 @@ object ModelArgmin {
     * contract — fail loudly on a malformed codebook). */
   def collectCodebook(df: org.apache.spark.sql.DataFrame, m: Int)
       : (Seq[Seq[Int]], Seq[Seq[Seq[Long]]]) = {
-    val bySub = df.selectExpr("cast(sub as int)", "cast(code as int)", "cq")
+    val bySub = df.selectExpr("cast(sub as long)", "cast(code as long)", "cq")
       .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toIndexedSeq))
+      .map(r => (intId(r.getLong(0), "sub"), intId(r.getLong(1), "code"),
+        r.getSeq[Long](2).toIndexedSeq))
       .groupBy(_._1)
     require(bySub.keySet == (0 until m).toSet,
       s"codebook subs ${bySub.keySet.toSeq.sorted} != 0..${m - 1}")

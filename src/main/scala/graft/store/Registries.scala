@@ -21,6 +21,10 @@ import graft.Tables
   *
   * The split convention matches the incremental queries: even doc/vec ids
   * are "history" (in the registry), odd ids are "today's batch".
+  *
+  * These are the batch-built registries. The streaming twins keep their
+  * own registries in sink dirs whose layout, compaction and crash healing
+  * belong to [[graft.streaming.BatchCommit]].
   */
 object Registries {
 
@@ -546,121 +550,6 @@ object Registries {
         graft.similarity.IvfPq.encode(e.filter(col("id") % 2 === 0),
           cents, cb, dims = 64, m = 8), path)
     }
-
-  /** Compact an append-only parquet registry directory to `numFiles`
-    * files — the maintenance the 50-drop curve of docs/ROUND9_NOTES.md
-    * demands: daily appends accumulate one small file per drop, and at toy
-    * scale the probe's cost growth IS the file-count overhead (listing + footer
-    * reads + one task per file). Content-preserving by construction
-    * (read → repartition → write to a temp dir → aside-swap): the live
-    * dir is RENAMED aside, the compacted temp renamed in, the aside
-    * deleted only after the swap succeeds — a crash anywhere in the
-    * window leaves the live dir or the aside readable, and [[recover]]
-    * (called on entry here and by readers that find the dir missing)
-    * restores whichever survives. A table format (Delta/Iceberg) makes
-    * the whole swap atomic in production.
-    *
-    * `foldKeys` turns on SUM-BY-KEY folding for delta-shaped registries
-    * (every non-key column is an additive delta whose per-key SUM is the
-    * value — the driftHist/sourceCensus/packing-totals/dedupImpact
-    * convention): instead of preserving rows verbatim (which leaves the
-    * registry O(batches) rows forever — a minutes-cadence year is ~500k
-    * delta rows per key), compaction folds them to one row per key.
-    * Read semantics are unchanged because every consumer of a delta
-    * registry sums by key anyway. Exactly-once is unchanged too: compact
-    * only ever sees COMMITTED rows (it runs after the batch's claim,
-    * single-writer per dir), and replay skip rests on the carried
-    * `_b*.done` markers, not on the folded rows — the compactEveryBatch
-    * crash rows pin exactly that window (a lost marker would re-append a
-    * batch whose rows are already folded in: double-count). */
-  def compact(s: SparkSession, dir: String, numFiles: Int = 4,
-              foldKeys: Seq[String] = Nil,
-              sortKeys: Seq[String] = Nil): Unit = {
-    val conf = s.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(conf)
-    recover(fs, dir)
-    if (!fs.exists(path)) return
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__compacting")
-    val aside = new org.apache.hadoop.fs.Path(dir + "__precompact")
-    if (fs.exists(tmp)) { fs.delete(tmp, true); () }
-    val data = s.read.parquet(dir)
-    val folded =
-      if (foldKeys.isEmpty) data
-      else {
-        val deltas = data.columns.toSeq.filterNot(foldKeys.contains)
-        require(deltas.nonEmpty, s"compact fold: $dir has only key columns")
-        data.groupBy(foldKeys.map(col): _*)
-          .agg(sum(col(deltas.head)).as(deltas.head),
-            deltas.tail.map(c => sum(col(c)).as(c)): _*)
-          .select(data.columns.map(col).toSeq: _*) // original column order
-      }
-    // sortKeys lays the compacted registry out RANGE-PARTITIONED and
-    // sorted by the key (content registries probed by point lookups, e.g.
-    // the dedupImpact fingerprint registry): each parquet row group then
-    // covers a narrow key range, so at deployment scale a probe's pushed
-    // key predicates skip most row groups via min/max stats instead of
-    // scanning the whole registry.
-    val laidOut =
-      if (sortKeys.isEmpty) folded.repartition(numFiles)
-      else folded.repartitionByRange(numFiles, sortKeys.map(col): _*)
-        .sortWithinPartitions(sortKeys.map(col): _*)
-    laidOut.write.mode("overwrite").parquet(tmp.toString)
-    // carry streaming batch done-markers (_b*.done, [[graft.streaming
-    // .BatchCommit]]) across the swap: compaction renames data files out
-    // of their batch prefixes, so losing the markers would make a replay
-    // of the in-flight batch re-append rows compaction already folded in
-    fs.listStatus(path).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isFile && n.startsWith("_b") && n.endsWith(".done")) {
-        val out = fs.create(new org.apache.hadoop.fs.Path(tmp, n), true)
-        out.close()
-      } else if (st.isFile && n == "_nplanes") {
-        // the plane-count pin ([[graft.streaming.EmbStreams.checkNPlanes]])
-        // is registry METADATA like the markers: losing it across a swap
-        // would let a p-mismatched stream restart slip past the guard
-        org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-          new org.apache.hadoop.fs.Path(tmp, n), false,
-          s.sessionState.newHadoopConf())
-        ()
-      }
-    }
-    if (!fs.rename(path, aside))
-      throw new java.io.IOException(s"compact: aside $path -> $aside failed")
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"compact: rename $tmp -> $path failed")
-    fs.delete(aside, true)
-    ()
-  }
-
-  /** Crash recovery for [[compact]]'s aside-swap: if the live dir is
-    * missing, restore it from a committed compacted temp (the crash hit
-    * between the two renames) or from the pre-compact aside; stale
-    * leftovers beside an intact live dir are cleared. Idempotent. */
-  def recover(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__compacting")
-    val aside = new org.apache.hadoop.fs.Path(dir + "__precompact")
-    if (!fs.exists(path)) {
-      // prefer the compacted temp (same content, fewer files) when it is
-      // COMMITTED (_SUCCESS); a partially-written temp is never promoted
-      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")) &&
-          fs.rename(tmp, path)) ()
-      else if (fs.exists(aside) && !fs.rename(aside, path))
-        throw new java.io.IOException(s"compact recovery $aside -> $dir failed")
-    }
-    if (fs.exists(path)) { // live intact → leftovers are stale
-      if (fs.exists(tmp)) { fs.delete(tmp, true); () }
-      if (fs.exists(aside)) { fs.delete(aside, true); () }
-    }
-  }
-
-  /** [[recover]] with the FileSystem derived from the session — the form
-    * registry readers call before a bootstrap existence check. */
-  def recover(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    recover(p.getFileSystem(s.sessionState.newHadoopConf()), dir)
-  }
 
   /** Force every bench-relevant registry for `dir` onto disk — benches
     * call this in their (untimed) setup, mirroring

@@ -91,10 +91,8 @@ object DocStreams {
       // may live on HDFS/S3/file:-URIs where a local-path check is always
       // false — every micro-batch would then silently read an empty
       // registry and dedup only within itself (wrong results, no error)
-      val registry = BatchCommit.readOr(spark, registryDir)(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("seg_fp", BinaryType)))))
+      val registry = BatchCommit.readOr(spark, registryDir,
+        StructType(Seq(StructField("seg_fp", BinaryType))))
       // persist the flagged plan, not just the raw batch: the registry
       // delta and the cleaned docs both consume it, and re-running it
       // would anti-join the (growing) registry twice per micro-batch.
@@ -131,14 +129,20 @@ object DocStreams {
     * set.
     *
     * State shape differs from the append-only registries: a cluster
-    * merge RELABELS old docs, so `labelsDir` is rewrite-in-place (write
-    * temp → swap, [[graft.store.Registries.compact]]'s non-transactional
-    * caveat: a table format makes the swap atomic in production; the
+    * merge RELABELS old docs, so `labelsDir` is rewritten in place by
+    * [[BatchCommit.replace]] (the sink protocol's aside-swap; a table
+    * format makes it atomic in production) and read back through
+    * [[BatchCommit.readOr]], which heals a crashed swap first. The
+    * rewrite needs no batch marker: CC over already-swapped labels ∪ the
+    * same pairs yields the same labels, so a replay converges whichever
+    * copy the heal restores — including the window with the live dir
+    * missing and both the aside and a committed temp present, where the
+    * heal promotes the temp (already swapped) rather than the aside. The
     * sig/band registries stay append-only, deltas written LAST per the
-    * recache ordering rule shared by every twin here). Empty-state
-    * bootstrap derives schemas from the real builders over `limit(0)` so
-    * the probe paths cannot drift from the batch op's. Convergence with
-    * the monolithic rerun is DocStreamsSpec's twin test; d33's oracle
+    * recache ordering rule shared by every twin here. Empty-state
+    * schemas come from the real builders over `limit(0)` so the probe
+    * paths cannot drift from the batch op's. Convergence with the
+    * monolithic rerun is DocStreamsSpec's twin test; d33's oracle
     * enforces the same contract cell-exactly on the batch path. */
   def clusterMaintStream(docStream: DataFrame, idCol: String, textCol: String,
                          sigDir: String, bandDir: String, labelsDir: String,
@@ -146,84 +150,29 @@ object DocStreams {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docStream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
       val spark = batch.sparkSession
-      val conf = spark.sessionState.newHadoopConf()
       // undo any crashed partial append BEFORE the registry reads: the
-      // probe must see exactly the pre-batch sig/band registries (the
-      // label swap itself is naturally idempotent — CC over the already-
-      // swapped labels ∪ the same pairs yields the same labels)
+      // probe must see exactly the pre-batch sig/band registries
       BatchCommit.rollback(spark, sigDir, bid)
       BatchCommit.rollback(spark, bandDir, bid)
-      def readOr(dir: String, empty: => DataFrame): DataFrame =
-        BatchCommit.readOr(spark, dir)(empty)
       import graft.dedup.MinHashLsh
-      val emptyDocs = batch.limit(0)
-      val storedSig = readOr(sigDir,
-        MinHashLsh.signaturesMd5(emptyDocs, idCol, textCol))
-      val storedBands = readOr(bandDir,
-        MinHashLsh.bandIndex(
-          MinHashLsh.signaturesMd5(emptyDocs, idCol, textCol), idCol,
-          literalKeys = true))
+      val emptySig = MinHashLsh.signaturesMd5(batch.limit(0), idCol, textCol)
+      val storedSig = BatchCommit.readOr(spark, sigDir, emptySig.schema)
+      val storedBands = BatchCommit.readOr(spark, bandDir,
+        MinHashLsh.bandIndex(emptySig, idCol, literalKeys = true).schema)
       val nSig = MinHashLsh.signaturesMd5(batch, idCol, textCol).persist()
       try {
         val (pairs, (_, bandDelta)) = MinHashLsh.incrementalNearDupFromIndex(
           nSig, storedBands, storedSig, idCol,
           minEstJaccard = 0.5, literalKeys = true)
-        // crash recovery: if the live table is missing, the crash hit the
-        // rename window — resume from the aside copy, or (if the crash
-        // landed after the new table was fully written to the __updating
-        // temp but before its rename) from the temp itself, gated on the
-        // commit marker so a partially-written temp is never read. Never
-        // silently reset cluster state to empty.
-        val asideDir = labelsDir + "__old"
-        val updatingDir = labelsDir + "__updating"
-        val lfs = new org.apache.hadoop.fs.Path(labelsDir).getFileSystem(conf)
-        def readable(d: String): Boolean =
-          lfs.exists(new org.apache.hadoop.fs.Path(d))
-        def committed(d: String): Boolean =
-          lfs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))
-        // a committed temp is promoted EAGERLY (rename, not lazy read):
-        // the swap below deletes-and-rewrites the temp dir, which would
-        // pull the rug from under a lazily-planned scan of it
-        if (!readable(labelsDir) && !readable(asideDir) &&
-            committed(updatingDir)) {
-          if (!lfs.rename(new org.apache.hadoop.fs.Path(updatingDir),
-              new org.apache.hadoop.fs.Path(labelsDir)))
-            throw new java.io.IOException(
-              s"label recovery $updatingDir -> $labelsDir failed")
-        }
-        val labelsSrc = if (readable(labelsDir)) labelsDir else asideDir
-        val storedLabels = readOr(labelsSrc,
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            StructType(Seq(StructField(idCol, LongType),
-              StructField("cluster_id", LongType)))))
+        val storedLabels = BatchCommit.readOr(spark, labelsDir,
+          StructType(Seq(StructField(idCol, LongType),
+            StructField("cluster_id", LongType))))
         val edges = storedLabels.filter(col(idCol) =!= col("cluster_id"))
           .select(col(idCol).as("id_a"), col("cluster_id").as("id_b"))
           .unionByName(pairs.select("id_a", "id_b"))
-        val newLabels = graft.ops.ConnectedComponents
+        BatchCommit.replace(labelsDir, graft.ops.ConnectedComponents
           .clusters(edges, "id_a", "id_b")
-          .select(col("id").as(idCol), col("cluster_id"))
-        // rewrite-in-place: temp + aside-swap. The old table is RENAMED
-        // aside (not deleted) before the new one renames in, and the
-        // aside is deleted only AFTER the new table is live — so a crash
-        // anywhere in the window leaves the live dir, the aside, or a
-        // committed temp readable, and the bootstrap above resumes from
-        // whichever survives instead of silently resetting cluster state
-        // to empty. (A table format makes the whole swap atomic in
-        // production.) The stale aside from the PREVIOUS swap is cleared
-        // up-front, while the live dir still exists to cover it.
-        val lp = new org.apache.hadoop.fs.Path(labelsDir)
-        val fs = lp.getFileSystem(conf)
-        val tmp = new org.apache.hadoop.fs.Path(updatingDir)
-        val aside = new org.apache.hadoop.fs.Path(asideDir)
-        if (fs.exists(lp) && fs.exists(aside)) { fs.delete(aside, true); () }
-        if (fs.exists(tmp)) { fs.delete(tmp, true); () }
-        newLabels.write.mode("overwrite").parquet(tmp.toString)
-        if (fs.exists(lp) && !fs.rename(lp, aside))
-          throw new java.io.IOException(s"label aside $lp -> $aside failed")
-        if (!fs.rename(tmp, lp))
-          throw new java.io.IOException(s"label swap $tmp -> $lp failed")
-        if (fs.exists(aside)) { fs.delete(aside, true); () }
+          .select(col("id").as(idCol), col("cluster_id")))
         Failpoints.hit("cluster:mid1", sigDir)
         // append-only registries LAST (content-dependency ordering: the
         // probe above reads them, so their this-batch deltas land after)
@@ -262,10 +211,8 @@ object DocStreams {
       val spark = batch.sparkSession
       BatchCommit.rollback(spark, regionsDir, bid)
       BatchCommit.rollback(spark, registryDir, bid)
-      val registry = BatchCommit.readOr(spark, registryDir)(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("fp", StringType)))))
+      val registry = BatchCommit.readOr(spark, registryDir,
+        StructType(Seq(StructField("fp", StringType))))
       // persist the batch's fingerprint rows: regions and delta both
       // consume them, and the native winnowing scan is the expensive part
       val fps = graft.text.Winnowing.fingerprintRows(
@@ -317,10 +264,8 @@ object DocStreams {
       BatchCommit.rollback(spark, segRegistryDir, bid)
       BatchCommit.rollback(spark, fpRegistryDir, bid)
       def registry(dir: String, colName: String): DataFrame =
-        BatchCommit.readOr(spark, dir)(
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            StructType(Seq(StructField(colName, BinaryType)))))
+        BatchCommit.readOr(spark, dir,
+          StructType(Seq(StructField(colName, BinaryType))))
       val fpReg = registry(fpRegistryDir, "fp")
       val segReg = registry(segRegistryDir, "seg_fp")
       val w = org.apache.spark.sql.expressions.Window
@@ -393,10 +338,8 @@ object DocStreams {
       val spark = batch.sparkSession
       BatchCommit.rollback(spark, keptDir, bid)
       BatchCommit.rollback(spark, registryDir, bid)
-      val registry = BatchCommit.readOr(spark, registryDir)(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("dhash", LongType)))))
+      val registry = BatchCommit.readOr(spark, registryDir,
+        StructType(Seq(StructField("dhash", LongType))))
       val hashes = graft.multimodal.Multimodal.dhashPartitions(batch, spark)
         .toDF().persist()
       try {
@@ -438,12 +381,10 @@ object DocStreams {
       import spark.implicits._
       BatchCommit.rollback(spark, pairsDir, bid)
       BatchCommit.rollback(spark, registryDir, bid)
-      val registry = BatchCommit.readOr(spark, registryDir)(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("d0", LongType), StructField("d1", LongType),
-            StructField("d2", LongType)))))
+      val registry = BatchCommit.readOr(spark, registryDir,
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("d0", LongType), StructField("d1", LongType),
+          StructField("d2", LongType))))
       val hashes = batch.select(col("doc_id"), col("payload"))
         .as[(Long, Array[Byte])]
         .mapPartitions(_.flatMap { case (id, b) =>
@@ -547,11 +488,6 @@ object DocStreams {
                       compactAfterFiles: Int = 64): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docStream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
       val spark = batch.sparkSession
-      // histDir is write-only in this flow (only driftReport ever reads
-      // it), yet it compacts below — heal a half-swapped compaction at
-      // entry or the aside holding the whole accumulated histogram is
-      // eventually deleted (the dedupImpactStream hazard)
-      graft.store.Registries.recover(spark, histDir)
       BatchCommit.rollback(spark, histDir, bid)
       // id-space contract: a histogram registry stores sums, so an
       // interleaved/re-delivered id cannot be de-duplicated later — the
@@ -581,9 +517,6 @@ object DocStreams {
                          compactAfterFiles: Int = 64): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docStream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
       val spark = batch.sparkSession
-      // write-only sink that compacts: heal half-swapped compactions at
-      // entry (see dedupImpactStream's hazard note)
-      graft.store.Registries.recover(spark, censusDir)
       BatchCommit.rollback(spark, censusDir, bid)
       // id-space contract (see driftHistStream): refuse interleaved ids
       val wm = IdWatermark.guard(batch, "doc_id", censusDir, bid)
@@ -609,15 +542,12 @@ object DocStreams {
   def driftReport(spark: SparkSession, refHist: DataFrame,
                   histDir: String): DataFrame = {
     // readOr: a report taken before the first drop lands (or mid-crash,
-    // where recover() heals a half-swapped compaction first) sees an
+    // where readOr heals a half-swapped compaction first) sees an
     // empty delta table, not an exception — PSI then reads pure
     // reference occupancy
-    val newHist = BatchCommit.readOr(spark, histDir)(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("source", StringType),
-            StructField("chars_bin", LongType),
-            StructField("n", LongType)))))
+    val newHist = BatchCommit.readOr(spark, histDir,
+        StructType(Seq(StructField("source", StringType),
+          StructField("chars_bin", LongType), StructField("n", LongType))))
       .groupBy("source", "chars_bin").agg(sum(col("n")).as("n_new"))
     val h = refHist.join(newHist, Seq("source", "chars_bin"), "full_outer")
       .na.fill(0L, Seq("n_old", "n_new"))
@@ -658,11 +588,9 @@ object DocStreams {
       // returns the dir this batch appends to
       val itemsSeg = RolledSink.prepare(spark, itemsDir, bid, segmentRollBytes)
       BatchCommit.rollback(spark, totalsDir, bid)
-      val totals = BatchCommit.readOr(spark, totalsDir)(
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            StructType(Seq(StructField("source", StringType),
-              StructField("delta", LongType)))))
+      val totals = BatchCommit.readOr(spark, totalsDir,
+          StructType(Seq(StructField("source", StringType),
+            StructField("delta", LongType))))
         .groupBy("source").agg(sum(col("delta")).as("__base"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy("doc_id")
@@ -767,22 +695,14 @@ object DocStreams {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docStream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
       val spark = batch.sparkSession
-      // impactDir is write-only (never readOr'd), yet it compacts below —
-      // so a compaction crash there must be healed explicitly at entry or
-      // the aside holding all prior impact history is eventually deleted
-      // (the fp registry's open segment gets the same heal inside
-      // RolledSink.prepare)
-      graft.store.Registries.recover(spark, impactDir)
       BatchCommit.rollback(spark, impactDir, bid)
       // rolled-sink entry: sweeps seal stagings, heals the open segment,
       // rolls this batch back in it, and seals/rolls BEFORE any append —
       // a replayed batch's partial files are always in the open segment
       val fpSeg = RolledSink.prepare(spark, fpDir, bid, segmentRollBytes)
-      val stored = RolledSink.readOr(spark, fpDir)(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("fp", BinaryType),
-            StructField("canonical_id", LongType)))))
+      val stored = RolledSink.readOr(spark, fpDir,
+        StructType(Seq(StructField("fp", BinaryType),
+          StructField("canonical_id", LongType))))
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
       // fp is stored as the RAW 16-byte digest, not the 32-char hex string
       // the query-surface twins print: the registry grows one row per

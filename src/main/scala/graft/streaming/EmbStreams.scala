@@ -72,18 +72,15 @@ object EmbStreams {
       BatchCommit.rollback(spark, pairsDir, bid)
       BatchCommit.rollback(spark, bucketRegistryDir, bid)
       BatchCommit.rollback(spark, vecRegistryDir, bid)
-      def readOr(dir: String, schema: StructType): DataFrame =
-        BatchCommit.readOr(spark, dir)(
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
       val newEmb = batch
         .select(col("vec_id").as("id"), col("embedding").as("vec")).persist()
       try {
-        val storedBuckets = readOr(bucketRegistryDir, StructType(Seq(
-          StructField("id", LongType), StructField("bucket", LongType))))
-        val storedVec = readOr(vecRegistryDir, StructType(Seq(
-          StructField("id", LongType),
-          StructField("vec", ArrayType(FloatType)))))
+        val storedBuckets = BatchCommit.readOr(spark, bucketRegistryDir,
+          StructType(Seq(StructField("id", LongType),
+            StructField("bucket", LongType))))
+        val storedVec = BatchCommit.readOr(spark, vecRegistryDir,
+          StructType(Seq(StructField("id", LongType),
+            StructField("vec", ArrayType(FloatType)))))
         val newBuckets = Knn.lshBuckets(newEmb, dim, nPlanes)
           .select(col("id"), col("bucket"))
         val allVec = storedVec.unionByName(newEmb)
@@ -186,8 +183,7 @@ object EmbStreams {
       val spark = batch.sparkSession
       // open-segment maintenance: heal a half-swapped compaction, undo
       // this batch's crashed partial append, seal-and-roll if over the
-      // threshold (DocStreams.dedupImpactStream's hazard note explains
-      // why the heal must run even though nothing readOr's this sink)
+      // threshold
       val seg = RolledSink.prepare(spark, labelsDir, bid, segmentRollBytes)
       // id-space contract (DocStreams.driftHistStream's convention): a
       // re-delivered vec_id would duplicate its label row and inflate
@@ -241,25 +237,17 @@ object EmbStreams {
         // no partial append of it exists and no compaction swap is
         // mid-flight, so the old per-drop sweep paid an O(total cells)
         // FS walk for nothing — noise at 8 cells, 10^4 FS round-trips
-        // per drop before any data moved at real IVF index size. Heal
-        // names are DERIVED from every child (a crash between compact's
-        // two renames leaves only `cell=3__precompact`; listing live
-        // dirs would miss the vanished one), so strip the compaction
-        // suffixes and recover each distinct live name whether or not it
-        // currently exists.
+        // per drop before any data moved at real IVF index size. Cell
+        // names come from [[BatchCommit.sinkNames]] (a crash between a
+        // compaction's two renames leaves only the cell's aside; listing
+        // live dirs would miss the vanished one), so each cell is
+        // recovered whether or not its live dir currently exists.
         if (!healed.get()) {
-          val names =
-            if (!fs.exists(root)) Set.empty[String]
-            else fs.listStatus(root).iterator
-              .filter(_.isDirectory).map(_.getPath.getName)
-              .filter(_.startsWith("cell="))
-              .map(_.stripSuffix("__precompact").stripSuffix("__compacting"))
-              .toSet
-          names.foreach { n =>
-            cellsRecovered.incrementAndGet()
-            graft.store.Registries.recover(spark,
-              new org.apache.hadoop.fs.Path(root, n).toString)
-          }
+          BatchCommit.sinkNames(fs, root).filter(_.startsWith("cell="))
+            .foreach { n =>
+              cellsRecovered.incrementAndGet()
+              BatchCommit.recover(spark, new org.apache.hadoop.fs.Path(root, n).toString)
+            }
           BatchCommit.rollback(spark, codesDir, bid)
           healed.set(true)
         }

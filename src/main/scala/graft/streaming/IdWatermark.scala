@@ -42,24 +42,23 @@ private[graft] object IdWatermark {
   final case class Token(wm: Long, batchMax: Long, skip: Boolean)
 
   /** Entry-time contract check (call after the sink rollbacks, before any
-    * content write): rolls back a crashed watermark append, reads the
-    * committed watermark, and requires min(batch id) > watermark. Throws
-    * [[IllegalStateException]] on violation — the batch replays forever
-    * until the feed is fixed, which is the point: silent double-counting
-    * is the failure being bought out. */
+    * content write): heals and rolls back a crashed watermark append,
+    * reads the committed watermark, and requires min(batch id) >
+    * watermark. Throws [[IllegalStateException]] on violation — the
+    * batch replays forever until the feed is fixed, which is the point:
+    * silent double-counting is the failure being bought out. */
   def guard(batch: DataFrame, idCol: String, sinkDir: String,
             bid: Long): Token = {
     val spark = batch.sparkSession
     val wmDir = dirFor(sinkDir)
-    // heal a half-swapped watermark compaction BEFORE the done-marker
-    // check: markers ride the swap, so consulting them while the live dir
-    // is renamed aside would mis-read a committed batch as uncommitted
-    graft.store.Registries.recover(spark, wmDir)
+    // rollback first: it heals a half-swapped watermark compaction, and
+    // markers ride the swap, so the done-marker check below must not run
+    // while the live dir is renamed aside (a committed batch would read
+    // as uncommitted). Once the marker exists the rollback is a no-op.
+    BatchCommit.rollback(spark, wmDir, bid)
     if (BatchCommit.isDone(spark, wmDir, bid))
       return Token(-1L, -1L, skip = true) // whole batch already committed
-    BatchCommit.rollback(spark, wmDir, bid)
-    val wm = -1L + BatchCommit.readOr(spark, wmDir)(
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+    val wm = -1L + BatchCommit.readOr(spark, wmDir, schema)
       .agg(coalesce(sum(col("delta")), lit(0L))).head().getLong(0)
     val mm = batch.agg(min(col(idCol)), max(col(idCol))).head()
     if (mm.isNullAt(0)) return Token(wm, wm, skip = true) // empty batch

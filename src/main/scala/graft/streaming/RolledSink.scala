@@ -1,7 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import BatchCommit.{fsFor, visibleParquet}
 
 /** Segment-rolled layout for append-only CONTENT sinks — the shape whose
   * compaction cost is independent of stream age.
@@ -18,21 +21,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   root/seg-00001/   sealed
   *   root/seg-00002/   OPEN — appends, compaction, marker pruning
   *
-  * Each segment is a plain [[BatchCommit]] sink dir (tagged data files,
-  * `_b*.done` markers, [[graft.store.Registries.compact]] aside-swap),
-  * so the exactly-once replay protocol applies unchanged WITHIN the open
+  * Each segment is a plain [[BatchCommit]] sink dir, so the exactly-once
+  * replay protocol and its swap healing apply unchanged WITHIN the open
   * segment. When the open segment's visible bytes exceed the roll
   * threshold it is sealed: one final compaction, then the next segment
-  * dir is staged beside it with the live done-markers copied in and
+  * dir is staged beside it with the live segment's metadata (its
+  * done-markers) carried in by [[BatchCommit.carryMetadata]] and
   * published by a single rename — the commit point of the roll. The
-  * marker copy is load-bearing: replay consults the CURRENT open
+  * marker carry is load-bearing: replay consults the CURRENT open
   * segment, and a committed batch whose marker stayed behind in a sealed
   * segment would re-append its rows into the new one. A crash anywhere
   * in the seal window leaves either the old open segment intact (staging
   * dirs are swept at the next entry) or the new segment committed;
-  * segment names are derived with compaction suffixes stripped (the
-  * ivfCodesIngest heal rule), so a segment mid-compaction-swap is still
-  * found and recovered rather than shadowed by a freshly created sibling.
+  * segment names come from [[BatchCommit.sinkNames]], so a segment
+  * mid-compaction-swap is still found and recovered rather than shadowed
+  * by a freshly created sibling.
   *
   * At deployment scale the analogue is date/size-partitioned table
   * segments (or a table format's partition spec); readers union the
@@ -46,26 +49,14 @@ object RolledSink {
     * bytes, whatever the stream's age. */
   val DefaultRollBytes: Long = 256L * 1024 * 1024
 
-  private def fsFor(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-
   private def segName(idx: Int): String = f"$SegPrefix$idx%05d"
 
-  /** Committed segment names under `root`, compaction suffixes stripped
-    * (a segment whose live dir vanished mid-swap is still a segment —
-    * [[graft.store.Registries.recover]] restores it), staging dirs
-    * excluded. Sorted ascending; the last is the open segment. */
+  /** Committed segment names under `root` (a segment whose live dir
+    * vanished mid-swap is still a segment), seal stagings excluded.
+    * Sorted ascending; the last is the open segment. */
   private def segNames(fs: FileSystem, root: Path): Seq[String] =
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).iterator
-      .filter(_.isDirectory).map(_.getPath.getName)
+    BatchCommit.sinkNames(fs, root)
       .filter(n => n.startsWith(SegPrefix) && !n.contains(".tmp-"))
-      .map(_.stripSuffix("__precompact").stripSuffix("__compacting"))
-      .toSeq.distinct.sorted
-
-  private def visibleParquet(st: org.apache.hadoop.fs.FileStatus): Boolean =
-    st.isFile && st.getPath.getName.endsWith(".parquet") &&
-      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
 
   private def visibleBytes(fs: FileSystem, seg: Path): Long =
     if (!fs.exists(seg)) 0L
@@ -74,20 +65,19 @@ object RolledSink {
   /** Entry-time maintenance for a rolled sink, returning the open
     * segment dir this batch's writes go to. Order matters:
     *  1. sweep stale seal stagings (a crashed roll's leftovers);
-    *  2. find/create the open segment and heal its compaction state;
-    *  3. [[BatchCommit.rollback]] this batch in it — a crashed partial
-    *     append is always in the CURRENT open segment (rolls happen
-    *     here, before any append, so a replayed batch cannot have
-    *     partial files in a segment sealed since);
-    *  4. roll if the open segment is over `rollBytes`: final compaction
+    *  2. find/create the open segment and [[BatchCommit.rollback]] this
+    *     batch in it (which heals a crashed compaction swap first) — a
+    *     crashed partial append is always in the CURRENT open segment
+    *     (rolls happen here, before any append, so a replayed batch
+    *     cannot have partial files in a segment sealed since);
+    *  3. roll if the open segment is over `rollBytes`: final compaction
     *     (skipped when the segment is already compact), then stage the
-    *     next segment with the live markers copied in and publish it by
+    *     next segment with the live metadata carried in and publish it by
     *     rename. The rollback MUST precede the roll — sealing first
     *     would fold a crashed batch's partial files into an immutable
     *     segment. */
   def prepare(spark: SparkSession, rootDir: String, batchId: Long,
-              rollBytes: Long = DefaultRollBytes,
-              targetFiles: Int = 4): String = {
+              rollBytes: Long = DefaultRollBytes): String = {
     val root = new Path(rootDir)
     val fs = fsFor(spark, rootDir)
     if (fs.exists(root)) fs.listStatus(root).foreach { st =>
@@ -101,12 +91,10 @@ object RolledSink {
       fs.mkdirs(new Path(root, segName(0))); segName(0)
     }
     val open = new Path(root, openName)
-    graft.store.Registries.recover(spark, open.toString)
     BatchCommit.rollback(spark, open.toString, batchId)
     if (visibleBytes(fs, open) <= rollBytes) open.toString
     else {
-      if (fs.listStatus(open).count(visibleParquet) > targetFiles)
-        graft.store.Registries.compact(spark, open.toString, targetFiles)
+      BatchCommit.maybeCompact(spark, open.toString, BatchCommit.CompactFiles)
       val nextIdx = openName.stripPrefix(SegPrefix).toInt + 1
       val next = new Path(root, segName(nextIdx))
       val staging = new Path(root,
@@ -115,12 +103,7 @@ object RolledSink {
       fs.mkdirs(staging)
       // carry the LIVE done-markers (pruneMarkers keeps the newest two)
       // into the segment replay will consult
-      fs.listStatus(open).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isFile && n.startsWith("_b") && n.endsWith(".done")) {
-          fs.create(new Path(staging, n), true).close()
-        }
-      }
+      BatchCommit.carryMetadata(fs, open, staging)
       if (!fs.rename(staging, next)) {
         fs.delete(staging, true)
         throw new java.io.IOException(
@@ -137,7 +120,7 @@ object RolledSink {
     val fs = fsFor(spark, rootDir)
     segNames(fs, root).map { n =>
       val seg = new Path(root, n)
-      graft.store.Registries.recover(spark, seg.toString)
+      BatchCommit.recover(spark, seg.toString)
       seg
     }.filter(seg => fs.exists(seg) &&
         fs.listStatus(seg).exists(visibleParquet))
@@ -150,9 +133,12 @@ object RolledSink {
   def read(spark: SparkSession, rootDir: String): DataFrame =
     spark.read.parquet(dataPaths(spark, rootDir): _*)
 
-  def readOr(spark: SparkSession, rootDir: String)
-            (empty: => DataFrame): DataFrame = {
+  /** [[read]], or an empty frame of `schema` when no segment holds data. */
+  def readOr(spark: SparkSession, rootDir: String,
+             schema: StructType): DataFrame = {
     val paths = dataPaths(spark, rootDir)
-    if (paths.isEmpty) empty else spark.read.parquet(paths: _*)
+    if (paths.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+    else spark.read.parquet(paths: _*)
   }
 }

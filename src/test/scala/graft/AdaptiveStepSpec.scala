@@ -146,7 +146,7 @@ class AdaptiveStepSpec extends AnyFunSuite {
       .select(col("id"), (col("id") % 4).as("bucket"))
       .repartition(8).write.mode("overwrite").parquet(reg)
     graft.streaming.EmbStreams.checkNPlanes(spark, reg, 6)
-    Registries.compact(spark, reg, numFiles = 2)
+    graft.streaming.BatchCommit.compact(spark, reg, numFiles = 2)
     assert(new java.io.File(reg, "_nplanes").isFile,
       "compaction dropped the plane-count sidecar")
     graft.streaming.EmbStreams.checkNPlanes(spark, reg, 6) // still readable

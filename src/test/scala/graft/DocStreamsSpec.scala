@@ -251,7 +251,7 @@ class DocStreamsSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$base/labels"),
-      new org.apache.hadoop.fs.Path(s"$base/labels__old")))
+      new org.apache.hadoop.fs.Path(s"$base/labels__precompact")))
     val stage2 = java.nio.file.Files.createTempDirectory("cl-stream2").toString
     // an empty-pair drop: brand-new docs that near-dup nothing
     docs.filter(col("doc_id") < 0).repartition(1)
@@ -276,13 +276,13 @@ class DocStreamsSpec extends AnyFunSuite {
 
     // double-crash window: the first crash hit the rename gap (live
     // missing) and the SECOND crash hit after the new labels were fully
-    // committed to the __updating temp but before its swap-in — only the
+    // committed to the __compacting temp but before its swap-in — only the
     // temp survives. The bootstrap must promote the committed temp, not
     // silently reset cluster history to empty (the r8 ADVICE scenario).
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$base/labels"),
-      new org.apache.hadoop.fs.Path(s"$base/labels__updating")))
+      new org.apache.hadoop.fs.Path(s"$base/labels__compacting")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$base/labels__updating/_SUCCESS")), "fixture temp lacks commit marker")
+      s"$base/labels__compacting/_SUCCESS")), "fixture temp lacks commit marker")
     val stage3 = java.nio.file.Files.createTempDirectory("cl-stream3").toString
     spark.createDataFrame(spark.sparkContext.parallelize(Seq(
         org.apache.spark.sql.Row(900002L, "second recovery probe lonely text",
@@ -298,7 +298,7 @@ class DocStreamsSpec extends AnyFunSuite {
     q3.awaitTermination()
     val recovered2 = spark.read.parquet(s"$base/labels")
     assert(recovered2.count() == batch.count(),
-      "recovery from the committed __updating temp lost cluster state")
+      "recovery from the committed __compacting temp lost cluster state")
     assert(recovered2.except(batch).isEmpty && batch.except(recovered2).isEmpty,
       "temp-promoted labels diverged from the pre-crash state")
   }

@@ -129,7 +129,7 @@ class IvfStreamSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("ivf-codes-h").toString
     runFlow(stage, s"$tmp/codes", s"$tmp/ckpt", minBatches = 2)
 
-    // simulate Registries.compact dying between rename(live, aside) and
+    // simulate BatchCommit.compact dying between rename(live, aside) and
     // rename(tmp, live) on a POPULATED cell: the live dir vanishes and
     // only `cell=K__precompact` remains — the window where a heal that
     // merely lists existing cell= dirs would never recover the cell, the

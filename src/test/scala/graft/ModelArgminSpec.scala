@@ -137,4 +137,11 @@ class ModelArgminSpec extends AnyFunSuite {
       .sortBy(_._1)
     assert(got.toSeq == ref.toSeq)
   }
+
+  test("collectModel refuses an id outside the int range instead of wrapping it") {
+    val model = Seq((1L, Seq(0L, 1L)), (2147483648L, Seq(2L, 3L))).toDF("cid", "cq")
+    val e = intercept[IllegalArgumentException](
+      ModelArgmin.collectModel(model, "cid", "cq"))
+    assert(e.getMessage.contains("model column cid holds 2147483648"), e.getMessage)
+  }
 }

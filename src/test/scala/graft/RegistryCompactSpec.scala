@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.Registries
+import graft.streaming.BatchCommit
 
 /** Registry compaction is content-preserving and actually reduces the
   * file count an appended registry accumulates. */
@@ -20,12 +21,12 @@ class RegistryCompactSpec extends AnyFunSuite {
       .count(_.getName.endsWith(".parquet"))
     val before = spark.read.parquet(dir).collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(files() >= 16, s"append staging produced only ${files()} files")
-    Registries.compact(spark, dir, numFiles = 3)
+    BatchCommit.compact(spark, dir, numFiles = 3)
     assert(files() == 3, s"expected 3 files after compaction, got ${files()}")
     val after = spark.read.parquet(dir).collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(after == before, "compaction changed registry content")
     // compacting a missing dir is a no-op, not an error
-    Registries.compact(spark, dir + "_missing")
+    BatchCommit.compact(spark, dir + "_missing")
   }
 
   test("compact crash windows leave the registry recoverable, never empty") {
@@ -49,7 +50,7 @@ class RegistryCompactSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(a + "__compacting")
     assert(fs.rename(new org.apache.hadoop.fs.Path(a),
       new org.apache.hadoop.fs.Path(a + "__precompact")))
-    Registries.recover(spark, a)
+    BatchCommit.recover(spark, a)
     assert(content(a) == wantA, "window-A recovery lost registry content")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(a + "__compacting")) &&
       !fs.exists(new org.apache.hadoop.fs.Path(a + "__precompact")),
@@ -58,9 +59,9 @@ class RegistryCompactSpec extends AnyFunSuite {
     // window B: crash between rename(tmp, live) and delete(aside) —
     // live (compacted) and aside both present
     val b = stage("b"); val wantB = content(b)
-    Registries.compact(spark, b, numFiles = 2) // full swap…
+    BatchCommit.compact(spark, b, numFiles = 2) // full swap…
     spark.read.parquet(b).write.mode("overwrite").parquet(b + "__precompact")
-    Registries.recover(spark, b) // …then a stale aside reappears
+    BatchCommit.recover(spark, b) // …then a stale aside reappears
     assert(content(b) == wantB, "window-B recovery changed content")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(b + "__precompact")))
 
@@ -72,14 +73,14 @@ class RegistryCompactSpec extends AnyFunSuite {
     fs.delete(new org.apache.hadoop.fs.Path(c + "__compacting", "_SUCCESS"), false)
     assert(fs.rename(new org.apache.hadoop.fs.Path(c),
       new org.apache.hadoop.fs.Path(c + "__precompact")))
-    Registries.recover(spark, c)
+    BatchCommit.recover(spark, c)
     assert(content(c) == wantC, "window-C recovery lost registry content")
 
     // compact() itself recovers a crashed predecessor before compacting
     val d = stage("d"); val wantD = content(d)
     assert(fs.rename(new org.apache.hadoop.fs.Path(d),
       new org.apache.hadoop.fs.Path(d + "__precompact")))
-    Registries.compact(spark, d, numFiles = 2)
+    BatchCommit.compact(spark, d, numFiles = 2)
     assert(content(d) == wantD)
   }
 
@@ -191,7 +192,7 @@ class RegistryCompactSpec extends AnyFunSuite {
       Seq(("a", 0L, 2L, 10L), ("a", 1L, 3L, 20L), ("b", 0L, 5L, 30L))
         .toDF("source", "bin", "n", "chars")
         .repartition(2).write.mode("append").parquet(dir)
-    Registries.compact(spark, dir, numFiles = 1,
+    BatchCommit.compact(spark, dir, numFiles = 1,
       foldKeys = Seq("source", "bin"))
     val out = spark.read.parquet(dir)
     assert(out.columns.toSeq == Seq("source", "bin", "n", "chars"),
