@@ -73,15 +73,6 @@ object MinHashLsh {
       .select(col(idCol), array((0 until p.numHashes).map(i => col(s"h$i")): _*).as("sig"))
   }
 
-  /** Distinct candidate pairs (id_a < id_b) that collide in >= 1 band.
-    * The band signature hashes r consecutive minhashes together; the
-    * self-join shuffles on (band, bandSig) so only same-bucket docs meet. */
-  /** (id, band, band_sig) — one row per document per band. With
-    * `literalKeys` the band signature is the ':'-joined minhash values
-    * themselves instead of their xxhash64 — identical pair sets (band
-    * equality is all that matters), but engine-computable for the oracle
-    * at the cost of wider shuffle keys; the hashed default stays the
-    * 100 TB path. */
   /** Public builder for the DURABLE band index: the registry a daily-crawl
     * deployment stores alongside the signature table, so each increment
     * probes it directly instead of re-banding the entire history
@@ -94,6 +85,12 @@ object MinHashLsh {
                 literalKeys: Boolean = false): DataFrame =
     bandTable(sig, idCol, p, literalKeys)
 
+  /** (id, band, band_sig) — one row per document per band. With
+    * `literalKeys` the band signature is the ':'-joined minhash values
+    * themselves instead of their xxhash64 — identical pair sets (band
+    * equality is all that matters), but engine-computable for the oracle
+    * at the cost of wider shuffle keys; the hashed default stays the
+    * 100 TB path. */
   private def bandTable(sig: DataFrame, idCol: String, p: Params,
                         literalKeys: Boolean = false): DataFrame = {
     val bandSigs =
@@ -110,28 +107,17 @@ object MinHashLsh {
     sig.select(col(idCol), posexplode(bandSigs).as(Seq("band", "band_sig")))
   }
 
+  /** A band bucket: documents meet in a pair join only on equal keys. */
+  private val BandKeys = Seq("band", "band_sig")
+
+  /** Distinct candidate pairs (id_a < id_b) that collide in >= 1 band.
+    * The band signature hashes r consecutive minhashes together; the
+    * self-join shuffles on (band, bandSig) so only same-bucket docs meet. */
   def candidatePairs(sig: DataFrame, idCol: String,
                      p: Params = Params(),
-                     maxBucketSize: Option[Int] = None,
-                     literalKeys: Boolean = false): DataFrame = {
-    val banded = bandTable(sig, idCol, p, literalKeys)
-    // Hot-bucket cap (the 100 TB dial): a band bucket holding n docs emits
-    // n^2 candidate pairs — boilerplate-heavy corpora concentrate there.
-    // Dropping oversized buckets bounds the blowup; recall only drops for
-    // pairs whose EVERY matching band is oversized.
-    val pruned = maxBucketSize match {
-      case Some(cap) =>
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_sig")
-        banded.withColumn("__bn", count(lit(1)).over(w))
-          .filter(col("__bn") <= cap).drop("__bn")
-      case None => banded
-    }
-    val a = pruned.select(col("band"), col("band_sig"), col(idCol).as("id_a"))
-    val b = pruned.select(col("band"), col("band_sig"), col(idCol).as("id_b"))
-    a.join(b, Seq("band", "band_sig"))
-      .filter(col("id_a") < col("id_b"))
+                     literalKeys: Boolean = false): DataFrame =
+    BucketPairs.selfPairs(bandTable(sig, idCol, p, literalKeys), BandKeys, idCol)
       .select("id_a", "id_b").distinct()
-  }
 
   /** Incremental dedup probe — the daily-crawl flow: candidate pairs that
     * involve AT LEAST ONE new document (new×existing and new×new), probed
@@ -145,32 +131,15 @@ object MinHashLsh {
     * candidate set restricted to pairs touching a new doc. */
   def incrementalCandidates(newSig: DataFrame, existingSig: DataFrame,
                             idCol: String, p: Params = Params(),
-                            maxBucketSize: Option[Int] = None,
-                            literalKeys: Boolean = false): DataFrame = {
-    val bn = bandTable(newSig, idCol, p, literalKeys)
-      .select(col("band"), col("band_sig"), col(idCol).as("id_n"))
-    // reuse the new side's band table for the probe target instead of
-    // re-banding it inside the union
-    val ball = bandTable(existingSig, idCol, p, literalKeys)
-      .select(col("band"), col("band_sig"), col(idCol).as("id_o"))
-      .unionByName(bn.withColumnRenamed("id_n", "id_o"))
-    // the hot-bucket cap is MORE important here than in the batch path:
-    // the daily-crawl flow probes every new doc against the whole corpus,
-    // and one boilerplate band bucket with 10^6 existing members would
-    // emit 10^6 pairs per new doc landing in it
-    val pruned = maxBucketSize match {
-      case Some(cap) =>
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_sig")
-        ball.withColumn("__bn", count(lit(1)).over(w))
-          .filter(col("__bn") <= cap).drop("__bn")
-      case None => ball
-    }
-    bn.join(pruned, Seq("band", "band_sig"))
-      .filter(col("id_n") =!= col("id_o"))
-      .select(least(col("id_n"), col("id_o")).as("id_a"),
-        greatest(col("id_n"), col("id_o")).as("id_b"))
-      .distinct()
-  }
+                            literalKeys: Boolean = false): DataFrame =
+    probeCandidates(bandTable(newSig, idCol, p, literalKeys),
+      bandTable(existingSig, idCol, p, literalKeys), idCol)
+
+  /** Distinct (id_a, id_b) of the new bands probing stored ∪ new bands. */
+  private def probeCandidates(newBands: DataFrame, storedBands: DataFrame,
+                              idCol: String): DataFrame =
+    BucketPairs.probePairs(newBands, storedBands, BandKeys, idCol, maxRows = None)
+      .select("id_a", "id_b").distinct()
 
   /** Candidates + signature-estimated Jaccard (fraction of agreeing
     * minhashes), filtered at `minEstJaccard`. */
@@ -218,33 +187,25 @@ object MinHashLsh {
     * the exact minhash-agreement estimate. Equals the full-corpus
     * [[nearDupFromSig]] restricted to pairs touching a new doc
     * (IncrementalDedupSpec; d26's oracle checks it cell-exact on the md5
-    * hash source). Returns (pairs, signature delta to append) — the delta
-    * IS `newSig`, returned for the append-registry symmetry the other
-    * incremental twins share. */
+    * hash source). It is [[incrementalNearDupFromIndex]] over the stored
+    * side's band table. Returns (pairs, signature delta to append) — the
+    * delta IS `newSig`, returned for the append-registry symmetry the
+    * other incremental twins share. */
   def incrementalNearDupFromSig(newSig: DataFrame, storedSig: DataFrame,
                                 idCol: String, minEstJaccard: Double,
                                 p: Params = Params(),
-                                maxBucketSize: Option[Int] = None,
                                 literalKeys: Boolean = false): (DataFrame, DataFrame) = {
-    val nSig = newSig.cache()
-    // cache the stored side too: it feeds the band table AND both
-    // estimate joins — three evaluations of the history signature pass
-    // when the caller computes it inline (d26, the rebuild worst-case
-    // twin; measured 11.4 s at sf1, dominated by re-signing history 3x).
-    // One (id, sig) row per doc. The registry-probing production path
-    // (incrementalNearDupFromIndex) reads stored PARQUET and is untouched.
+    // cache the stored side: it feeds the band table AND both estimate
+    // joins — three evaluations of the history signature pass when the
+    // caller computes it inline (d26, the rebuild worst-case twin;
+    // measured 11.4 s at sf1, dominated by re-signing history 3x). One
+    // (id, sig) row per doc. The registry-probing production path
+    // (incrementalNearDupFromIndex called directly) reads stored PARQUET
+    // and is untouched.
     val sSig = storedSig.cache()
-    val cand = incrementalCandidates(nSig, sSig, idCol, p,
-      maxBucketSize, literalKeys)
-    val allSig = sSig.unionByName(nSig)
-    val est = size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-      (m: Column) => m)).cast("double") / lit(p.numHashes.toDouble)
-    val pairs = cand
-      .join(allSig.select(col(idCol).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(allSig.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("est_jaccard", est)
-      .filter(col("est_jaccard") >= minEstJaccard)
-      .select("id_a", "id_b", "est_jaccard")
+    val (pairs, (nSig, _)) = incrementalNearDupFromIndex(newSig,
+      bandTable(sSig, idCol, p, literalKeys), sSig, idCol, minEstJaccard, p,
+      literalKeys)
     (pairs, nSig)
   }
 
@@ -259,7 +220,6 @@ object MinHashLsh {
   def incrementalNearDupFromIndex(newSig: DataFrame, storedBands: DataFrame,
                                   storedSig: DataFrame, idCol: String,
                                   minEstJaccard: Double, p: Params = Params(),
-                                  maxBucketSize: Option[Int] = None,
                                   literalKeys: Boolean = false)
       : (DataFrame, (DataFrame, DataFrame)) = {
     val nSig = newSig.cache()
@@ -267,31 +227,8 @@ object MinHashLsh {
     // delta share this table, so appending the delta never re-pays the
     // banding pass
     val bnFull = bandTable(nSig, idCol, p, literalKeys)
-    val bn = bnFull.select(col("band"), col("band_sig"), col(idCol).as("id_n"))
-    val ball = storedBands
-      .select(col("band"), col("band_sig"), col(idCol).as("id_o"))
-      .unionByName(bn.withColumnRenamed("id_n", "id_o"))
-    val pruned = maxBucketSize match {
-      case Some(cap) =>
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_sig")
-        ball.withColumn("__bn", count(lit(1)).over(w))
-          .filter(col("__bn") <= cap).drop("__bn")
-      case None => ball
-    }
-    val cand = bn.join(pruned, Seq("band", "band_sig"))
-      .filter(col("id_n") =!= col("id_o"))
-      .select(least(col("id_n"), col("id_o")).as("id_a"),
-        greatest(col("id_n"), col("id_o")).as("id_b"))
-      .distinct()
-    val allSig = storedSig.unionByName(nSig)
-    val est = size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-      (m: Column) => m)).cast("double") / lit(p.numHashes.toDouble)
-    val pairs = cand
-      .join(allSig.select(col(idCol).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(allSig.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("est_jaccard", est)
-      .filter(col("est_jaccard") >= minEstJaccard)
-      .select("id_a", "id_b", "est_jaccard")
+    val pairs = withEstimate(probeCandidates(bnFull, storedBands, idCol),
+      storedSig.unionByName(nSig), idCol, minEstJaccard, p)
     (pairs, (nSig, bnFull))
   }
 
@@ -299,7 +236,15 @@ object MinHashLsh {
                              minEstJaccard: Double, p: Params,
                              literalKeys: Boolean = false): DataFrame = {
     val sig = sigDf.cache()
-    val cand = candidatePairs(sig, idCol, p, literalKeys = literalKeys)
+    withEstimate(candidatePairs(sig, idCol, p, literalKeys), sig, idCol,
+      minEstJaccard, p)
+  }
+
+  /** Closes candidate pairs with the signature-agreement estimate (the
+    * fraction of agreeing minhashes, `est_jaccard`), both ids joined back
+    * to `sig`, filtered at `minEstJaccard`. */
+  private def withEstimate(cand: DataFrame, sig: DataFrame, idCol: String,
+                           minEstJaccard: Double, p: Params): DataFrame = {
     val est = size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
       (m: Column) => m)).cast("double") / lit(p.numHashes.toDouble)
     cand

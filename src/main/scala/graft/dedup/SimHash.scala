@@ -62,19 +62,12 @@ object SimHash {
       .select(col(idCol), bits.reduce(_ bitwiseOR _).as("simhash"))
   }
 
-  /** Tuning presets with measured behavior on the synthetic documents
+  /** The tuning preset with measured behavior on the synthetic documents
     * corpus (sf0.1, 5k docs; precision = confirmed-near-dup fraction of
-    * emitted pairs vs the exact-Jaccard ground truth):
-    *
-    *  - [[Strict]]   (maxDist 3, chunks 4):  smallest candidate set, finds
-    *    only heavy template overlap; best default for boilerplate-light web
-    *    text.
-    *  - [[Balanced]] (maxDist 6, chunks 8):  the DedupSpec configuration —
-    *    recall ≥ 0.9 vs exact 0.5-Jaccard ground truth; candidate volume
-    *    grows with 8-bit chunk collisions, so keep the hot-chunk cap on.
-    *  - [[Wide]]     (maxDist 10, chunks 16): 4-bit chunks collide
-    *    constantly (≤ 16 values per chunk); ONLY usable with a hot-chunk
-    *    cap, for recall-at-any-cost sweeps on small corpora.
+    * emitted pairs vs the exact-Jaccard ground truth): [[Balanced]]
+    * (maxDist 6, chunks 8) is the DedupSpec configuration — recall ≥ 0.9
+    * vs exact 0.5-Jaccard ground truth; candidate volume grows with 8-bit
+    * chunk collisions, so keep the hot-chunk cap on.
     *
     * Per-corpus guidance: precision falls as documents share format
     * boilerplate (simhash is a whole-document sketch — it cannot separate
@@ -82,18 +75,15 @@ object SimHash {
     * either pre-strip boilerplate, or tighten maxDist and verify emitted
     * pairs with exact Jaccard (Curation does exactly that). */
   final case class Preset(maxDist: Int, chunks: Int, maxChunkBucket: Option[Int])
-  val Strict   = Preset(3, 4, Some(4096))
   val Balanced = Preset(6, 8, Some(4096))
-  val Wide     = Preset(10, 16, Some(1024))
 
   /** Pairs (id_a < id_b) with hamming(simhash) <= maxDist, found via the
     * chunk-collision join. Requires maxDist < chunks for completeness.
     *
     * `maxChunkBucket` is the 100 TB dial: a chunk value shared by n docs
     * emits n² candidates (e.g. the all-zero chunk of short docs) — buckets
-    * above the cap are dropped, like [[MinHashLsh.candidatePairs]]'s
-    * hot-bucket cap. Recall only drops for pairs whose EVERY agreeing
-    * chunk is oversized. */
+    * above the cap are dropped by [[BucketPairs.cap]]. Recall only drops
+    * for pairs whose EVERY agreeing chunk is oversized. */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
                      maxDist: Int = 3, chunks: Int = 4,
                      maxChunkBucket: Option[Int] = None): DataFrame =
@@ -126,6 +116,17 @@ object SimHash {
     }
   }
 
+  /** A chunk bucket: hashes meet in a pair join only on equal keys. */
+  private val ChunkKeys = Seq("chunk", "chunk_val")
+
+  /** (idCol, simhash, chunk, chunk_val) — one row per chunk of each hash. */
+  private def chunked(sh: DataFrame, idCol: String, bits: Int,
+                      chunks: Int): DataFrame =
+    sh.select(col(idCol), col("simhash"),
+      posexplode(array(chunkExprs(bits, chunks).map { case (lo, mask) =>
+        expr(s"(simhash >> $lo) & $mask") }: _*))
+        .as(Seq("chunk", "chunk_val")))
+
   private def nearDupFromSimhash(sh0: DataFrame, idCol: String,
                                  maxDist: Int, chunks: Int,
                                  maxChunkBucket: Option[Int],
@@ -138,34 +139,14 @@ object SimHash {
     // every hash-family pair query paying its feature extraction 2-4x.
     // One (id, simhash) row per doc: tiny, the MinHashLsh sig precedent.
     val sh = sh0.cache()
-    val chunked = sh.select(col(idCol), col("simhash"),
-      posexplode(array(chunkExprs(bits, chunks).map { case (lo, mask) =>
-        expr(s"(simhash >> $lo) & $mask") }: _*))
-        .as(Seq("chunk", "chunk_val")))
-    val pruned = maxChunkBucket match {
-      case Some(cap) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("chunk", "chunk_val")
-        chunked.withColumn("__bn", count(lit(1)).over(w))
-          .filter(col("__bn") <= cap).drop("__bn")
-      case None => chunked
-    }
-    val a = pruned.select(col("chunk"), col("chunk_val"),
-      col(idCol).as("id_a"), col("simhash").as("sh_a"))
-    val b = pruned.select(col("chunk"), col("chunk_val"),
-      col(idCol).as("id_b"), col("simhash").as("sh_b"))
-    a.join(b, Seq("chunk", "chunk_val"))
-      .filter(col("id_a") < col("id_b"))
+    val pruned = BucketPairs.cap(chunked(sh, idCol, bits, chunks), ChunkKeys,
+      maxChunkBucket)
+    BucketPairs.selfPairs(pruned, ChunkKeys, idCol, "simhash" -> "sh")
       .select(col("id_a"), col("id_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxDist)
   }
-
-  /** Preset-driven variant. */
-  def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
-                     p: Preset): DataFrame =
-    nearDuplicates(df, idCol, textCol, p.maxDist, p.chunks, p.maxChunkBucket)
 
   /** Banded hamming near-dup over ANY precomputed ≤64-bit hash column —
     * the chunk-collision join generalized beyond text simhashes
@@ -269,34 +250,14 @@ object SimHash {
                                        maxChunkBucket: Option[Int] = None,
                                        bits: Int = 64): DataFrame = {
     require(maxDist < chunks, "pigeonhole completeness needs maxDist < chunks")
-    val exprs = chunkExprs(bits, chunks)
-    def chunked(df: DataFrame): DataFrame =
-      df.select(col(idCol).cast("long").as("id"),
-          col(hashCol).cast("long").as("simhash"))
-        .select(col("id"), col("simhash"),
-          posexplode(array(exprs.map { case (lo, mask) =>
-            expr(s"(simhash >> $lo) & $mask") }: _*))
-            .as(Seq("chunk", "chunk_val")))
-    val cn = chunked(newHashes)
-    val call = chunked(storedHashes).unionByName(cn)
+    def norm(df: DataFrame): DataFrame =
+      chunked(df.select(col(idCol).cast("long").as("id"),
+        col(hashCol).cast("long").as("simhash")), "id", bits, chunks)
     // the hot-chunk cap guards the PROBED side: a stored chunk value
     // shared by n ids would otherwise fan every matching new id out n ways
-    val pruned = maxChunkBucket match {
-      case Some(cap) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("chunk", "chunk_val")
-        call.withColumn("__bn", count(lit(1)).over(w))
-          .filter(col("__bn") <= cap).drop("__bn")
-      case None => call
-    }
-    cn.select(col("chunk"), col("chunk_val"),
-        col("id").as("id_n"), col("simhash").as("sh_n"))
-      .join(pruned.select(col("chunk"), col("chunk_val"),
-        col("id").as("id_o"), col("simhash").as("sh_o")), Seq("chunk", "chunk_val"))
-      .filter(col("id_n") =!= col("id_o"))
-      // new-new pairs arrive in both orders; canonicalize before distinct
-      .select(least(col("id_n"), col("id_o")).as("id_a"),
-        greatest(col("id_n"), col("id_o")).as("id_b"),
+    BucketPairs.probePairs(norm(newHashes), norm(storedHashes), ChunkKeys,
+        "id", maxChunkBucket, "simhash" -> "sh")
+      .select(col("id_a"), col("id_b"),
         bit_count(col("sh_n").bitwiseXOR(col("sh_o"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxDist)

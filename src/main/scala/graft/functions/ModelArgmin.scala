@@ -111,8 +111,17 @@ object ModelArgmin {
   * path every assignment/encode query takes. rint == bround: both are
   * IEEE round-half-even on the exact double x·1024 (1024 is a power of
   * two, the product is exact). Null elements pass through as nulls,
-  * matching `transform`. */
+  * matching `transform`. Any input but `array<float>` fails at analysis
+  * (the kernel reads `getFloat`). */
 case class QuantizeVec(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(FloatType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"quantize_vec needs an array<float> column, got ${other.catalogString}")
+    }
 
   override def dataType: DataType = ArrayType(LongType,
     child.dataType.asInstanceOf[ArrayType].containsNull)

@@ -379,15 +379,6 @@ object CurationQ {
     |         array_to_string(t[(i*$SegTokens+1):(i*$SegTokens+$SegTokens)], ' ') AS seg
     |  FROM toks, UNNEST(generate_series(0, CAST(ceil(len(t) / $SegTokens.0) AS BIGINT) - 1)) AS u(i))""".stripMargin
 
-  /** d16's oracle: replay [[Bpe.stableModel]]'s merges in rank order as
-    * string replaces over a delimiter-guarded symbol encoding — chr(1)/
-    * chr(2) wrap every symbol (both absent from the corpus alphabet), so a
-    * replace can only ever match a whole adjacent symbol pair, and SQL
-    * replace's left-to-right non-overlap scan is exactly
-    * [[Bpe.mergePair]]'s. Rank-order replay equals the greedy lowest-rank
-    * encode loop because a merge's components rank strictly below it.
-    * Verified against an independent greedy-BPE implementation on all 500
-    * sf0.001 docs before wiring. */
   /** The frozen-vocabulary BPE encode of one word `w` as a SQL rewrite
     * chain (delimiter-guarded replaces in merge-rank order) — shared by
     * the d16 and q58 oracles so the two replay ONE tokenizer. */
@@ -400,6 +391,15 @@ object CurationQ {
     }
   }
 
+  /** d16's oracle: replay [[Bpe.stableModel]]'s merges in rank order as
+    * string replaces over a delimiter-guarded symbol encoding — chr(1)/
+    * chr(2) wrap every symbol (both absent from the corpus alphabet), so a
+    * replace can only ever match a whole adjacent symbol pair, and SQL
+    * replace's left-to-right non-overlap scan is exactly
+    * [[Bpe.mergePair]]'s. Rank-order replay equals the greedy lowest-rank
+    * encode loop because a merge's components rank strictly below it.
+    * Verified against an independent greedy-BPE implementation on all 500
+    * sf0.001 docs before wiring. */
   private def bpeEncodeOracle: String = {
     val chain = bpeChainSql
     s"""WITH toks AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.dedup.BucketPairs
 import graft.multimodal.Multimodal
 
 /** Multimodal-column queries. m01 is oracle-backed (byte-level metadata is
@@ -217,19 +218,6 @@ object MultimodalQ {
       "sum_r", "sum_g", "sum_b")
   }
 
-  /** REAL perceptual video dedup — the m09 shape at perceptual
-    * resolution over genuinely decoded frames: each document's AVI is
-    * container-walked, every frame ImageIO-decoded and dHashed
-    * ([[Multimodal.MjpegAvi.frameHashes]]); a frame is SHARED when its
-    * 24-bit dHash appears in more than one video (the re-used intro /
-    * card / template detector, robust to re-encoding where m09's byte
-    * checksums are not). Per video: frame count, shared count, shared
-    * fraction. Distinct-doc counts per hash via aggregation, never an
-    * O(docs) window set; no pair join — linear in total frames (measured
-    * sf0.1→sf1 exponent 0.48, docs/SCALE.md). The
-    * hamming-tolerant pair variant is
-    * [[graft.dedup.SimHash.hammingNearDuplicates]] (bits = 24) on the
-    * same hash column, exercised in MultimodalSpec. */
   /** Per-(doc, frame_idx) REAL-decode dHashes over the synthetic AVI
     * corpus (container walk + ImageIO + dHash per frame) — the
     * feature-extract stage shared by m11's set-level and m14's
@@ -245,6 +233,19 @@ object MultimodalQ {
     }).toDF()
   }
 
+  /** REAL perceptual video dedup — the m09 shape at perceptual
+    * resolution over genuinely decoded frames: each document's AVI is
+    * container-walked, every frame ImageIO-decoded and dHashed
+    * ([[Multimodal.MjpegAvi.frameHashes]]); a frame is SHARED when its
+    * 24-bit dHash appears in more than one video (the re-used intro /
+    * card / template detector, robust to re-encoding where m09's byte
+    * checksums are not). Per video: frame count, shared count, shared
+    * fraction. Distinct-doc counts per hash via aggregation, never an
+    * O(docs) window set; no pair join — linear in total frames (measured
+    * sf0.1→sf1 exponent 0.48, docs/SCALE.md). The
+    * hamming-tolerant pair variant is
+    * [[graft.dedup.SimHash.hammingNearDuplicates]] (bits = 24) on the
+    * same hash column, exercised in MultimodalSpec. */
   def videoPhash(s: SparkSession, dir: String): DataFrame = {
     // cache: the per-hash doc count and the join-back both read the frame
     // hash table; uncached, the AVI render+decode seam ran twice (r15
@@ -271,37 +272,38 @@ object MultimodalQ {
     * real scale). Shared by m14 and the clip-fixture spec. */
   private[graft] def clipPairs(hashes: DataFrame,
                                maxBucket: Option[Int] = None): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("frame_idx"))
-    val tri0 = hashes
-      .withColumn("d1", lead(col("dhash"), 1).over(w))
-      .withColumn("d2", lead(col("dhash"), 2).over(w))
-      .filter(col("d2").isNotNull)
-      .select(col("doc_id"), col("dhash").as("d0"), col("d1"), col("d2"))
-      .distinct()
     // hot-triple cap (the 100 TB dial, same shape as MinHashLsh's band
     // buckets): a black-card / station-ident triple carried by n videos
     // emits n² pairs — at cap, drop the bucket (recall only drops for
     // pairs whose EVERY shared triple is ubiquitous, i.e. pure boilerplate)
-    val tri = (maxBucket match {
-      case Some(cap) =>
-        val bw = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("d0"), col("d1"), col("d2"))
-        tri0.withColumn("__bn", count(lit(1)).over(bw))
-          .filter(col("__bn") <= cap).drop("__bn")
-      case None => tri0
+    val tri = BucketPairs.cap(frameTriples(hashes), TripleKeys, maxBucket)
       // cache: the triple self-join consumes this table on both sides —
       // uncached, the whole AVI render+decode+window chain ran twice and
       // the planner even BROADCAST one full copy (r15 plan audit: no
       // ReusedExchange fires across a BHJ probe side). A few triples per
       // video: tiny.
-    }).cache()
-    val a = tri.select(col("d0"), col("d1"), col("d2"), col("doc_id").as("id_a"))
-    val b = tri.select(col("d0"), col("d1"), col("d2"), col("doc_id").as("id_b"))
-    a.join(b, Seq("d0", "d1", "d2"))
-      .filter(col("id_a") < col("id_b"))
+      .cache()
+    BucketPairs.selfPairs(tri, TripleKeys, "doc_id")
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
+  }
+
+  /** A triple bucket: videos meet in a pair join only on an equal triple. */
+  private[graft] val TripleKeys = Seq("d0", "d1", "d2")
+
+  /** Each video's distinct consecutive dHash triples (doc_id, d0, d1, d2)
+    * from a per-frame hash table: two `lead`s over one doc-partitioned
+    * window, no self-join to build the shingles. Shared by [[clipPairs]]
+    * and its streaming twin [[graft.streaming.DocStreams.videoClipStream]]. */
+  private[graft] def frameTriples(hashes: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("doc_id")).orderBy(col("frame_idx"))
+    hashes
+      .withColumn("d1", lead(col("dhash"), 1).over(w))
+      .withColumn("d2", lead(col("dhash"), 2).over(w))
+      .filter(col("d2").isNotNull)
+      .select(col("doc_id"), col("dhash").as("d0"), col("d1"), col("d2"))
+      .distinct()
   }
 
   /** TEMPORAL video near-dup (m14): videos sharing runs of consecutive

@@ -375,18 +375,6 @@ object SimilarityQ {
       dims = 64, m = 8, nQueries = 3, nProbe = 2, topK = 10)
   }
 
-  /** SemDeDup-shape semantic dedup (published k-means-bucketed form):
-    * cluster the corpus with the e06 integer-exact Lloyd k-means (2
-    * rounds, k=8 seed centroids), then find near-duplicate pairs ONLY
-    * within each cluster — the pair space shrinks from n² to Σ|cell|²,
-    * and at 100 TB the cells are the bucketing key (write vectors
-    * cell-partitioned like e10b's codes and the pair join is co-located,
-    * never corpus-wide). Within-cell scoring keeps the e02 numeric
-    * contract: codegen'd fast-cosine prefilter with a 1e-6 sound margin,
-    * decimal-exact rescore at >= 0.4. e05 is the graph-closure
-    * alternative (CC over the exact pair set); THIS is the scalable
-    * candidate-restriction alternative — both are first-class and the
-    * judge can compare their outputs through their oracles. */
   /** Round-2 k-means cell assignment over the embedding corpus — e06's
     * `a2` table as a DataFrame (quantized points assigned against the
     * after-one-round centroids, ties to the lower cid). The clustering
@@ -414,8 +402,21 @@ object SimilarityQ {
     afterR1.map(c => (c.cid, c.vec.toSeq)).toDF("cid", "cq")
   }
 
-  /** SemDeDup over the frozen 8-cell k-means model (e11): within-cell
-    * cosine pairs >= 0.7, CC, keep = min-id representative.
+  /** SemDeDup-shape semantic dedup (published k-means-bucketed form):
+    * cluster the corpus with the e06 integer-exact Lloyd k-means (2
+    * rounds, k=8 seed centroids), then find near-duplicate pairs ONLY
+    * within each cluster — the pair space shrinks from n² to Σ|cell|²,
+    * and at 100 TB the cells are the bucketing key (write vectors
+    * cell-partitioned like e10b's codes and the pair join is co-located,
+    * never corpus-wide). Within-cell scoring keeps the e02 numeric
+    * contract: codegen'd fast-cosine prefilter with a 1e-6 sound margin,
+    * decimal-exact rescore at >= 0.4. e05 is the graph-closure
+    * alternative (CC over the exact pair set); THIS is the scalable
+    * candidate-restriction alternative — both are first-class and the
+    * judge can compare their outputs through their oracles.
+    *
+    * Output (e11): the within-cell pairs (id_a, id_b, cell, cos) at
+    * cos >= 0.4.
     *
     * SCALE CAVEAT (sf10 rehearsal): a FIXED cell count makes within-cell
     * pair work grow n²/8 — the same second-decade cliff as e07b's fixed
@@ -713,11 +714,6 @@ object SimilarityQ {
        |JOIN (SELECT vec_id, sqrt(nrm2) AS nrm2_sqrt FROM norms) nb ON nb.vec_id = id_b
        |WHERE d / (na.nrm2_sqrt * nb.nrm2_sqrt) >= 0.4$extraWhere""".stripMargin
 
-  /** e07b's BUCKETED incremental contract in SQL — same-bucket (e03's
-    * quantized plane family, 6 planes) new-touching pairs at exact cosine
-    * >= 0.4. A full standalone query (its own WITH), shared verbatim by
-    * e07b's oracle and the composed audits that reuse its pair set
-    * (d30b), so the bucketed semantics have exactly one source. */
   /** Shared CTE chain for the e19/e20 oracles: the ADAPTIVE-plane pair
     * surface. The plane count is re-derived from the history count with
     * the same law as [[graft.store.Registries.adaptiveEmbPlanes]] (both
@@ -769,6 +765,11 @@ object SimilarityQ {
        |  JOIN (SELECT vec_id, sqrt(nrm2) AS nr FROM norms) nb ON nb.vec_id = id_b
        |  WHERE d / (na.nr * nb.nr) >= 0.4)""".stripMargin
 
+  /** e07b's BUCKETED incremental contract in SQL — same-bucket (e03's
+    * quantized plane family, 6 planes) new-touching pairs at exact cosine
+    * >= 0.4. A full standalone query (its own WITH), shared verbatim by
+    * e07b's oracle and the composed audits that reuse its pair set
+    * (d30b), so the bucketed semantics have exactly one source. */
   private[queries] val bucketedIncrNearDupOracle: String =
     s"""WITH qv AS MATERIALIZED (
        |  SELECT vec_id,

@@ -498,10 +498,6 @@ object TextQ {
        |  i -> CAST(strpos('0123456789abcdef', substr($hexExpr, i + $skip, 1)) - 1 AS BIGINT)
        |       * (CAST(1 AS BIGINT) << (4 * ($nDigits - i)))))""".stripMargin
 
-  /** d06's oracle: the full MinHash pipeline in SQL, on the SAME seeded
-    * affine family the Spark aggregate uses (rendered as literals). The
-    * final WHERE takes an extra conjunct so d26's new-touching restriction
-    * cannot drift from the full rerun it must equal. */
   /** The full MinHash pipeline as a CTE BODY ending in `mh` (id_a, id_b,
     * est_jaccard ≥ 0.5) — m-prefixed names so it composes with
     * [[jaccardOracleCte]] in one statement (d41 joins the two chains).
@@ -545,6 +541,10 @@ object TextQ {
        |mh AS (SELECT * FROM mh0 WHERE est_jaccard >= 0.5)""".stripMargin
   }
 
+  /** d06's oracle: the full MinHash pipeline in SQL, on the SAME seeded
+    * affine family the Spark aggregate uses (rendered as literals). The
+    * final WHERE takes an extra conjunct so d26's new-touching restriction
+    * cannot drift from the full rerun it must equal. */
   private[queries] def minhashOracle(extraWhere: String = ""): String =
     s"""WITH $minhashCtes
        |SELECT id_a, id_b, est_jaccard FROM mh

@@ -444,16 +444,6 @@ object Knn {
       .filter(col("cos") >= minCos)
   }
 
-  /** The bucketed scale path for incremental near-dup: new vectors'
-    * LSH signatures probe the STORED bucket registry (the `(id, bucket)`
-    * table each increment appends — history's vectors are never re-read,
-    * never re-hashed). Returns (candidate pairs touching a new vector,
-    * registry delta to append). Candidates equal the full corpus-wide
-    * bucket self-join restricted to new-touching pairs (KnnSpec), so
-    * downstream exact rescoring (join vectors back by id, then the
-    * [[nearDupPairs]] phase-2 arithmetic) inherits e03's determinism.
-    * One equi-join on the signature — at 100 TB the registry is bucketed
-    * on `bucket`, making each day's probe a co-located join. */
   /** Multi-probe variant of [[incrementalBucketCandidates]]: a candidate
     * is any pair (new, stored) or (new, new) whose SIGNATURES differ in at
     * most `nFlip` bits — equivalently, the stored bucket lies inside the
@@ -576,6 +566,16 @@ object Knn {
       .filter(col("cos") >= minCos)
   }
 
+  /** The bucketed scale path for incremental near-dup: new vectors'
+    * LSH signatures probe the STORED bucket registry (the `(id, bucket)`
+    * table each increment appends — history's vectors are never re-read,
+    * never re-hashed). Returns (candidate pairs touching a new vector,
+    * registry delta to append). Candidates equal the full corpus-wide
+    * bucket self-join restricted to new-touching pairs (KnnSpec), so
+    * downstream exact rescoring (join vectors back by id, then the
+    * [[nearDupPairs]] phase-2 arithmetic) inherits e03's determinism.
+    * One equi-join on the signature — at 100 TB the registry is bucketed
+    * on `bucket`, making each day's probe a co-located join. */
   def incrementalBucketCandidates(newEmb: DataFrame, storedBuckets: DataFrame,
                                   dim: Int, nPlanes: Int = 8,
                                   seed: Long = 42L): (DataFrame, DataFrame) = {

@@ -344,6 +344,17 @@ object Registries {
     graft.queries.SimilarityQ.adaptivePlanes(n)
   }
 
+  /** The cache entry dir (all registries of one source dir) — exposed
+    * for the cache-GC spec. */
+  private[graft] def cacheEntryDir(dir: String): String =
+    s"$cacheRoot/${contentKey(dir)}"
+
+  /** The adaptive registry's committed cache path for `dir` at the
+    * current plane law — exposed for the step-boundary spec, which
+    * asserts rebuild-once and stale-sibling reaping against it. */
+  private[graft] def embBucketsAdaptivePath(s: SparkSession, dir: String): String =
+    s"$cacheRoot/${contentKey(dir)}/emb_buckets_adaptive_p${adaptiveEmbPlanes(s, dir)}"
+
   /** Stored `(id, bucket)` LSH registry at [[adaptiveEmbPlanes]] planes —
     * e19's probe target, the scale-true sibling of [[embBuckets]]. Same
     * plane family (prefix-stable seeded quantized hyperplanes), so the
@@ -362,17 +373,6 @@ object Registries {
     * not this path — the build fires again at p+1 (the amortized re-hash
     * above) instead of silently joining new-p hashes against old-p
     * signatures, which would break the hamming<=2 contract. */
-  /** The cache entry dir (all registries of one source dir) — exposed
-    * for the cache-GC spec. */
-  private[graft] def cacheEntryDir(dir: String): String =
-    s"$cacheRoot/${contentKey(dir)}"
-
-  /** The adaptive registry's committed cache path for `dir` at the
-    * current plane law — exposed for the step-boundary spec, which
-    * asserts rebuild-once and stale-sibling reaping against it. */
-  private[graft] def embBucketsAdaptivePath(s: SparkSession, dir: String): String =
-    s"$cacheRoot/${contentKey(dir)}/emb_buckets_adaptive_p${adaptiveEmbPlanes(s, dir)}"
-
   def embBucketsAdaptive(s: SparkSession, dir: String): DataFrame = {
     val p = adaptiveEmbPlanes(s, dir)
     val name = s"emb_buckets_adaptive_p$p"

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.dedup.Shingles
+import graft.dedup.{BucketPairs, Shingles}
+import graft.queries.MultimodalQ
 
 /** Structured-Streaming twins of the document-corpus operators — the
   * daily-crawl-drop flow: new document files land in a directory and are
@@ -373,9 +374,7 @@ object DocStreams {
     * stream of (doc_id, payload binary). */
   def videoClipStream(mediaStream: DataFrame, registryDir: String,
                       pairsDir: String,
-                      compactAfterFiles: Int = 64,
-                      maxBucket: Option[Int] =
-                        Some(graft.queries.MultimodalQ.HotTripleCap)): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+                      compactAfterFiles: Int = 64): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     mediaStream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
       val spark = batch.sparkSession
       import spark.implicits._
@@ -390,39 +389,17 @@ object DocStreams {
         .mapPartitions(_.flatMap { case (id, b) =>
           graft.multimodal.Multimodal.MjpegAvi.frameHashes(id, b) })
         .toDF()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("frame_idx"))
-      val newTri = hashes
-        .withColumn("d1", lead(col("dhash"), 1).over(w))
-        .withColumn("d2", lead(col("dhash"), 2).over(w))
-        .filter(col("d2").isNotNull)
-        .select(col("doc_id"), col("dhash").as("d0"), col("d1"), col("d2"))
-        .distinct().persist()
+      val newTri = MultimodalQ.frameTriples(hashes).persist()
       try {
-        val bn = newTri.select(col("d0"), col("d1"), col("d2"),
-          col("doc_id").as("id_n"))
-        val ball0 = registry
-          .select(col("d0"), col("d1"), col("d2"), col("doc_id").as("id_o"))
-          .unionByName(bn.withColumnRenamed("id_n", "id_o"))
-        // hot-triple cap on the PROBE TARGET, MinHashLsh's incremental
-        // convention: a ubiquitous triple with 10^6 registry members would
-        // emit 10^6 pairs for every new video landing in it
-        val ball = maxBucket match {
-          case Some(cap) =>
-            val bw = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("d0"), col("d1"), col("d2"))
-            ball0.withColumn("__bn", count(lit(1)).over(bw))
-              .filter(col("__bn") <= cap).drop("__bn")
-          case None => ball0
-        }
+        // hot-triple cap (MultimodalQ.HotTripleCap) on the PROBE TARGET:
+        // a ubiquitous triple with 10^6 registry members would emit 10^6
+        // pairs for every new video landing in it.
         // distinct BEFORE counting: an intra-batch pair appears twice in
-        // the probe join (each endpoint's bn row matches the other's ball
-        // row) — without the (pair, triple) dedup the count doubles
-        val pairs = bn.join(ball, Seq("d0", "d1", "d2"))
-          .filter(col("id_n") =!= col("id_o"))
-          .select(least(col("id_n"), col("id_o")).as("id_a"),
-            greatest(col("id_n"), col("id_o")).as("id_b"),
-            col("d0"), col("d1"), col("d2"))
+        // the probe join (each endpoint's new row matches the other's
+        // stored ∪ new row) — without the (pair, triple) dedup the count
+        // doubles
+        val pairs = BucketPairs.probePairs(newTri, registry,
+            MultimodalQ.TripleKeys, "doc_id", Some(MultimodalQ.HotTripleCap))
           .distinct()
           .groupBy("id_a", "id_b")
           .agg(count(lit(1)).as("n_shared"))
@@ -637,32 +614,6 @@ object DocStreams {
     * far below it and writes ONE file per drop. */
   private[graft] val PackItemFileTargetRows = 2L * 1000 * 1000
 
-  /** Streaming exact-dedup IMPACT accounting — d36's daily-drop twin and
-    * the doc-level exact-dedup flow itself: each drop's fingerprints
-    * probe the STORED fingerprint registry (history is never re-hashed),
-    * a doc is kept iff its fingerprint is globally new AND it is the
-    * drop's lowest-id holder of it, and two append-only sinks record the
-    * outcome — per-source impact DELTAS (additive: summing them per
-    * source reproduces d36's n_docs/n_kept/chars columns when drops
-    * arrive in doc_id order, the first-seen canonical then being the
-    * global min) and the (fp, canonical_id) registry delta. Write order
-    * follows the twins' replay rule (impact first, registry delta LAST):
-    * every stage's content depends only on the pre-batch registry, so a
-    * crashed batch recomputes identically. Registry cost: one narrow row
-    * per DISTINCT document ever seen; the probe is a batch-sized hash
-    * join against it.
-    *
-    * fpDir is a SEGMENT-ROLLED sink ([[RolledSink]]; read it back with
-    * [[RolledSink.read]]): the registry grows forever and nothing folds
-    * (every row is a distinct fp), so a flat dir's compaction would
-    * rewrite the whole accumulated registry every ~compactAfterFiles
-    * drops — O(history) per fire, amortized maintenance growing with
-    * stream age (the r13 cellLabel/packing economics, fixed the same
-    * way). Rolled, one compaction rewrites at most segmentRollBytes and
-    * each sealed segment stays fp-sorted for row-group pruning; the
-    * probe's read unions the segment dirs through ONE parquet relation,
-    * so its gated plan shape (in-place scan, no registry exchange) is
-    * unchanged. */
   /** Ceiling on the batch row count below which the dedup-impact probe
     * broadcasts the batch's distinct fingerprints (~24 B/row as raw
     * 16-byte digests → ~50 MB at the cap). A normal micro-batch is orders of magnitude under it;
@@ -689,6 +640,32 @@ object DocStreams {
         Seq("fp"), "left_semi")
       .select(col("fp"), lit(1).as("__known"))
 
+  /** Streaming exact-dedup IMPACT accounting — d36's daily-drop twin and
+    * the doc-level exact-dedup flow itself: each drop's fingerprints
+    * probe the STORED fingerprint registry (history is never re-hashed),
+    * a doc is kept iff its fingerprint is globally new AND it is the
+    * drop's lowest-id holder of it, and two append-only sinks record the
+    * outcome — per-source impact DELTAS (additive: summing them per
+    * source reproduces d36's n_docs/n_kept/chars columns when drops
+    * arrive in doc_id order, the first-seen canonical then being the
+    * global min) and the (fp, canonical_id) registry delta. Write order
+    * follows the twins' replay rule (impact first, registry delta LAST):
+    * every stage's content depends only on the pre-batch registry, so a
+    * crashed batch recomputes identically. Registry cost: one narrow row
+    * per DISTINCT document ever seen; the probe is a batch-sized hash
+    * join against it.
+    *
+    * fpDir is a SEGMENT-ROLLED sink ([[RolledSink]]; read it back with
+    * [[RolledSink.read]]): the registry grows forever and nothing folds
+    * (every row is a distinct fp), so a flat dir's compaction would
+    * rewrite the whole accumulated registry every ~compactAfterFiles
+    * drops — O(history) per fire, amortized maintenance growing with
+    * stream age (the r13 cellLabel/packing economics, fixed the same
+    * way). Rolled, one compaction rewrites at most segmentRollBytes and
+    * each sealed segment stays fp-sorted for row-group pruning; the
+    * probe's read unions the segment dirs through ONE parquet relation,
+    * so its gated plan shape (in-place scan, no registry exchange) is
+    * unchanged. */
   def dedupImpactStream(docStream: DataFrame, fpDir: String, impactDir: String,
                         compactAfterFiles: Int = 64,
                         segmentRollBytes: Long = RolledSink.DefaultRollBytes)

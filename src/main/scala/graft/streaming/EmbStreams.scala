@@ -140,23 +140,6 @@ object EmbStreams {
     }
   }
 
-  /** Streaming IVF+PQ index maintenance — the FLUSH half of e15's story:
-    * each drop of new vectors is encoded against the FROZEN
-    * centroids/codebook (passed in as data — in production the model
-    * store's artifacts; they never retrain per drop) and appended
-    * CELL-PARTITIONED into the live codes directory
-    * ([[BatchCommit.appendPartitioned]] — one root done-marker per
-    * batch, tagged files inside the `cell=` dirs), so the probe's
-    * partition pruning applies to every increment ever flushed and
-    * history is never re-encoded. Exactly-once under crash/replay like
-    * every other flow here (rollback on entry sweeps the cell subdirs);
-    * IvfStreamSpec proves the streamed directory converges to the full
-    * batch encode and that [[graft.similarity.IvfPq.searchStored]] over
-    * it equals the rebuilt index's search, and CrashRecoverySpec kills
-    * each commit window. Per-cell compaction bounds file counts: each
-    * `cell=` subdir is a plain parquet dir, recovered and compacted
-    * independently (markers live at the root, so marker logic is
-    * untouched). */
   /** Streaming cell-label maintenance — e17b's label-registry twin
     * ([[graft.store.Registries.cellLabels]]): each arriving drop of
     * vectors is quantized and assigned against the FROZEN centroid
@@ -215,6 +198,23 @@ object EmbStreams {
     * one-file-per-cell layout. */
   private[graft] val CodeFileTargetRows = 4L * 1000 * 1000
 
+  /** Streaming IVF+PQ index maintenance — the FLUSH half of e15's story:
+    * each drop of new vectors is encoded against the FROZEN
+    * centroids/codebook (passed in as data — in production the model
+    * store's artifacts; they never retrain per drop) and appended
+    * CELL-PARTITIONED into the live codes directory
+    * ([[BatchCommit.appendPartitioned]] — one root done-marker per
+    * batch, tagged files inside the `cell=` dirs), so the probe's
+    * partition pruning applies to every increment ever flushed and
+    * history is never re-encoded. Exactly-once under crash/replay like
+    * every other flow here (rollback on entry sweeps the cell subdirs);
+    * IvfStreamSpec proves the streamed directory converges to the full
+    * batch encode and that [[graft.similarity.IvfPq.searchStored]] over
+    * it equals the rebuilt index's search, and CrashRecoverySpec kills
+    * each commit window. Per-cell compaction bounds file counts: each
+    * `cell=` subdir is a plain parquet dir, recovered and compacted
+    * independently (markers live at the root, so marker logic is
+    * untouched). */
   def ivfCodesIngestStream(embStream: DataFrame, cents: DataFrame,
                            cb: DataFrame, codesDir: String,
                            dims: Int = 64, m: Int = 8,

@@ -191,14 +191,6 @@ object Bpe {
     Model(merges.toSeq, alphabet)
   }
 
-  /** Adaptive trainer: BPE rounds only ever look at the DISTINCT-WORD
-    * table, so when that table is small enough to collect (it usually is —
-    * 10^6 words × ~20 bytes), the driver loop beats `numMerges` Spark
-    * jobs by orders of magnitude in scheduling latency alone. Beyond
-    * `maxLocalVocab` distinct words it falls back to the distributed
-    * loop. Both paths produce identical models (BpeSpec proves it), so
-    * this is a pure execution-strategy choice, like a broadcast-join
-    * threshold. */
   /** The frozen 24-merge model `trainAuto` derives from the synthetic
     * documents corpus (docs/ROUND7_NOTES.md, identical at
     * sf0.01/sf0.1 — the corpus vocabulary is scale-invariant). A FIXED
@@ -218,6 +210,14 @@ object Bpe {
     alphabet = Seq(Eow, "a", "b", "c", "d", "e", "f", "g", "h", "i", "j",
       "k", "l", "m", "n", "o", "p", "q", "r", "s", "t", "u", "v", "w", "y"))
 
+  /** Adaptive trainer: BPE rounds only ever look at the DISTINCT-WORD
+    * table, so when that table is small enough to collect (it usually is —
+    * 10^6 words × ~20 bytes), the driver loop beats `numMerges` Spark
+    * jobs by orders of magnitude in scheduling latency alone. Beyond
+    * `maxLocalVocab` distinct words it falls back to the distributed
+    * loop. Both paths produce identical models (BpeSpec proves it), so
+    * this is a pure execution-strategy choice, like a broadcast-join
+    * threshold. */
   def trainAuto(df: DataFrame, textCol: String, numMerges: Int,
                 minCount: Long = 2, maxLocalVocab: Long = 1L << 20): Model = {
     val spark = df.sparkSession

@@ -62,8 +62,6 @@ object LangId {
       Seq("_um", "ma_", "os_", "as_", "_na", "na_", "_se", "se_", "dos", "das"))
   }
 
-  /** Space-padded lowercase character trigrams of `text`, '_' for space —
-    * one array per row, built with a single transform (no regex). */
   /** Normalized text for trigram extraction: space-padded, lowercased,
     * '_' for space. */
   def normalized(text: Column): Column =

@@ -183,12 +183,6 @@ object Segments {
     (rebuildFromFlags(flagged, idCol), registryDelta(flagged))
   }
 
-  /** The shared core of the incremental dedup: one row per segment of the
-    * new batch with its survival flag. Both outputs (cleaned docs,
-    * registry delta) derive from this plan — a caller consuming both
-    * should persist it (the streaming twin does, per micro-batch, and
-    * unpersists after its writes so a long-running stream does not
-    * accumulate cache entries). */
   /** The registry key: raw 16-byte md5 of the segment text. The registry
     * holds one row per distinct segment ever kept and is re-probed per
     * increment, so the key column's width is the per-drop probe bill —
@@ -197,6 +191,12 @@ object Segments {
     * collision needs ~2^64 distinct segments to become likely. */
   private[graft] def segDigest(seg: Column): Column = unhex(md5(seg))
 
+  /** The shared core of the incremental dedup: one row per segment of the
+    * new batch with its survival flag. Both outputs (cleaned docs,
+    * registry delta) derive from this plan — a caller consuming both
+    * should persist it (the streaming twin does, per micro-batch, and
+    * unpersists after its writes so a long-running stream does not
+    * accumulate cache entries). */
   private[graft] def incrementalFlags(newDocs: DataFrame, idCol: String,
                                       textCol: String,
                                       knownSegments: DataFrame,

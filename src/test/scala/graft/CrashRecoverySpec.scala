@@ -338,7 +338,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     // a dir nothing ever readOr's: crash batch 1 after its append, then
     // simulate compact dying between its two renames (live dir gone, the
     // __precompact aside holding ALL accumulated state). Without an
-    // entry-time Registries.recover the replay recreates an empty live
+    // entry-time BatchCommit.recover the replay recreates an empty live
     // dir, and the forced per-batch compact (threshold 0) then reads
     // 'live intact' and deletes the aside — silently losing every earlier
     // batch. With the heal, the replay converges to the uncrashed run.

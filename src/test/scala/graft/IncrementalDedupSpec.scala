@@ -73,6 +73,22 @@ class IncrementalDedupSpec extends AnyFunSuite {
       MinHashLsh.bandIndex(sigDelta, "doc_id", p, literalKeys = true)).isEmpty)
   }
 
+  test("probe-side cap: a bucket of exactly cap rows across stored ∪ new " +
+       "pairs, cap + 1 rows emits nothing, a new×new pair appears once") {
+    import spark.implicits._
+    // chunks = 1: the bucket is the hash value itself
+    val stored = Seq((1L, 1L), (2L, 1L), (3L, 2L), (4L, 2L), (5L, 2L))
+      .toDF("doc_id", "h")
+    val fresh = Seq((10L, 1L), (11L, 2L), (20L, 3L), (21L, 3L))
+      .toDF("doc_id", "h")
+    val got = graft.dedup.SimHash.incrementalHammingNearDuplicates(fresh,
+        stored, "doc_id", "h", maxDist = 0, chunks = 1,
+        maxChunkBucket = Some(3), bits = 8)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // bucket 1 holds 3 rows (= cap), bucket 2 holds 4, bucket 3 is new×new
+    assert(got.sorted == Seq((1L, 10L), (2L, 10L), (20L, 21L)), got)
+  }
+
   test("signatures recomputed from stored params are bit-identical (reusability)") {
     val docs = Tables(spark, sf).documents.limit(100)
     val s1 = MinHashLsh.signatures(docs, "doc_id", "text", p)

@@ -144,4 +144,12 @@ class ModelArgminSpec extends AnyFunSuite {
       ModelArgmin.collectModel(model, "cid", "cq"))
     assert(e.getMessage.contains("model column cid holds 2147483648"), e.getMessage)
   }
+
+  test("quantizeVec rejects a non-float array at analysis, naming the expected type") {
+    val df = Seq((1L, Seq(0.5, 1.0))).toDF("id", "vec")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(ModelArgmin.quantizeVec(col("vec"))))
+    assert(e.getMessage.contains("needs an array<float> column, got array<double>"),
+      e.getMessage)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{BatchCommit, RolledSink}
+import graft.streaming.{BatchCommit, Failpoints, RolledSink}
 
 /** Segment-rolled sink semantics ([[graft.streaming.RolledSink]]): the
   * layout exists so per-compaction cost is O(open segment) regardless of
@@ -80,6 +80,24 @@ class RolledSinkSpec extends AnyFunSuite {
     BatchCommit.append(batchDf(0L), seg1, 0L) // must skip on the marker
     assert(RolledSink.read(spark, root).count() == batchDf(0L).count(),
       "replay across a seal re-appended a committed batch")
+  }
+
+  test("an append crashed after its staging write leaves segment 0 open, " +
+       "and the replay holds each row once") {
+    val root = tmp("rolled-staged")
+    val seg0 = RolledSink.prepare(spark, root, 0L)
+    BatchCommit.append(batchDf(0L, rows = 5), seg0, 0L)
+    val seg = RolledSink.prepare(spark, root, 1L)
+    Failpoints.hook = (l, d) =>
+      if (l == "commit:staged" && d == seg) throw new RuntimeException("crash")
+    try intercept[RuntimeException](BatchCommit.append(batchDf(1L, rows = 5), seg, 1L))
+    finally Failpoints.hook = (_, _) => ()
+    val replay = RolledSink.prepare(spark, root, 1L)
+    assert(replay == seg0, s"a staging dir was taken for the open segment: $replay")
+    BatchCommit.append(batchDf(1L, rows = 5), replay, 1L)
+    val got = RolledSink.read(spark, root).collect().map(_.getLong(0)).toSeq
+    assert(got.sorted == Seq(0L, 1L).flatMap(b => (0 until 5).map(b * 100000L + _)),
+      "the replayed read lost or repeated a row")
   }
 
   test("seal crash windows heal: stale staging swept, a segment renamed " +
